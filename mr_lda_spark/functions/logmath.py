@@ -32,14 +32,14 @@ def logsumexp_agg(
     Python).  Numerically identical to the reference's streaming
     LogMath.add fold, but order-independent.
 
-    Deliberately NOT the collect_list+array-fold single-shuffle form
-    ``plans/lda.py`` uses for its partial combine: there the per-key
-    row count is bounded by cluster parallelism (≤P partition
-    partials), so a ≤P-element array is safe at any data scale.  Here
-    the per-key count is data-determined (e.g. df(term) token rows per
-    (term, topic) in the join-mode M-step) — collect_list would buffer
-    an unbounded array per key, so the two-pass join form is the one
-    that survives 100 TB.
+    Deliberately NOT the grouped-map fold ``plans/lda.combine_partials``
+    uses for its partial combine: there the per-key row count is
+    bounded by cluster parallelism (≤P partition partials per φ term
+    block), so a group fits in memory at any data scale.  Here the
+    per-key count is data-determined (e.g. df(term) token rows per
+    (term, topic) in the join-mode M-step) — a grouped fold would
+    buffer an unbounded group per key, so the two-pass join form is
+    the one that survives 100 TB.
     """
     maxes = df.groupBy(*group_cols).agg(F.max(value_col).alias("__max"))
     return (

@@ -14,11 +14,12 @@ TermCombiner.java / TermReducer.java), and a driver-side Newton–Raphson
 - φ sufficient statistics are accumulated **per partition** inside the
   kernel (dense (V+1,K) log-space matrix — the in-mapper combiner of
   DocumentMapper.java:263-313, but spill-free since it's bounded by
-  model size, not corpus size) and emitted as a handful of rows per
-  partition; the cross-partition combine is a relational logsumexp
-  (one small shuffle of ~partitions×V rows, grouped by term).
-- α sufficient statistics and the ELBO are partition-aggregated the
-  same way (A6/A7 — counters become plain aggregations).
+  model size, not corpus size) and emitted as a few dense term-block
+  rows per partition (about 1 MB each); the cross-partition combine
+  (``combine_partials``) is one grouped-map shuffle keyed by block that
+  logaddexp-reduces ≤ partitions rows per block on the executors.
+- α sufficient statistics and the ELBO are partition-aggregated in the
+  same pass, by plain sum (A6/A7 — counters become plain aggregations).
 - M-step finalization (η smoothing, per-topic normalizer, digamma
   transform, TermReducer.java:157-235) happens driver-side on the
   model-sized (V,K) matrix, which is then broadcast for the next
@@ -54,8 +55,10 @@ DEFAULT_LOG_ETA = math.log(1e-12)  # Settings.java:58
 
 # Union schema for the single-pass E-step output: 'doc' rows carry the
 # next corpus (terms + new gamma + per-doc ELBO); 'phi' rows carry one
-# term's partition-local log-phi-sum K-vector (id = term_id); 'alpha'
-# rows carry one partition's alpha-sufficient-statistic K-vector.
+# dense term block of a partition's log-phi-sum matrix (doc_id = block
+# index, vec = the block's (TB, K) slice, row-major); 'alpha' rows carry
+# one partition's alpha-sufficient-statistic K-vector; 'elbo' rows carry
+# one partition's [ELBO, docs, tokens].
 _ESTEP_SCHEMA = T.StructType(
     [
         T.StructField("kind", T.StringType()),
@@ -66,6 +69,72 @@ _ESTEP_SCHEMA = T.StructType(
         T.StructField("ll", T.DoubleType()),
     ]
 )
+
+# Size of one 'phi' term-block row: large enough that a partition's φ
+# leaves the kernel as a few rows, small enough for Arrow batches.
+_PHI_BLOCK_BYTES = 1 << 20
+
+
+def _phi_block_terms(num_topics: int) -> int:
+    """TB: terms per 'phi' block row for K topics."""
+    return max(1, _PHI_BLOCK_BYTES // (8 * num_topics))
+
+
+def _partials_frame(phi_accs: list, alpha_ss: np.ndarray, elbo: list) -> pd.DataFrame:
+    """The E-step kernel's per-partition tail (kind, lang, doc_id, vec):
+    each language's log-φ accumulator as dense term blocks, skipping
+    blocks no document touched, then one 'alpha' row and one 'elbo' row
+    ([ELBO, docs, tokens] of the partition)."""
+    rows = []
+    for lang, acc in enumerate(phi_accs):
+        tb = _phi_block_terms(acc.shape[1])
+        for b0 in range(0, len(acc), tb):
+            block = acc[b0 : b0 + tb]
+            if not np.isneginf(block).all():
+                rows.append(("phi", lang, b0 // tb, block.ravel()))
+    rows.append(("alpha", -1, -1, alpha_ss))
+    rows.append(("elbo", -1, -1, np.asarray(elbo, dtype=np.float64)))
+    return pd.DataFrame(rows, columns=["kind", "lang", "doc_id", "vec"])
+
+
+def combine_partials(out: DataFrame, keys: tuple = ("kind", "doc_id")) -> pd.DataFrame:
+    """Reduce the E-step's per-partition partials across partitions on
+    the executors (the reference's kind-branched combiner,
+    TermCombiner.java:19-35) and pull the result to the driver.
+
+    One group per ``keys`` value — ``(kind, block)``, or
+    ``(kind, lang, block)`` for PolyLDA: 'phi' term blocks merge by an
+    elementwise logaddexp, 'alpha'/'elbo' vectors by sum.  Each group
+    holds at most one row per input partition, and the driver receives
+    about V/TB + 2 rows, i.e. V×K doubles whatever the partition count.
+    """
+    keys = list(keys)
+
+    def reduce(pdf: pd.DataFrame) -> pd.DataFrame:
+        vecs = np.stack(pdf["vec"].to_numpy())
+        fold = np.logaddexp.reduce if pdf["kind"].iat[0] == "phi" else np.sum
+        return pdf[keys].iloc[:1].assign(vec=[fold(vecs, axis=0)])
+
+    partials = out.filter(F.col("kind") != "doc").select(*keys, "vec")
+    return partials.groupBy(*keys).applyInPandas(reduce, partials.schema).toPandas()
+
+
+def partial_sum(stats: pd.DataFrame, kind: str, size: int) -> np.ndarray:
+    """The combined 'alpha' or 'elbo' vector (zeros when no partition
+    had a document)."""
+    vecs = stats.loc[stats["kind"] == kind, "vec"]
+    return np.asarray(vecs.iloc[0], dtype=np.float64) if len(vecs) else np.zeros(size)
+
+
+def phi_matrix(stats: pd.DataFrame, num_rows: int, num_topics: int) -> np.ndarray:
+    """Reassemble combined 'phi' blocks into the dense (V+1, K) log-φ
+    matrix; terms no document used stay −inf."""
+    log_phi = np.full((num_rows, num_topics), -np.inf)
+    tb = _phi_block_terms(num_topics)
+    phi = stats[stats["kind"] == "phi"]
+    for b, vec in zip(phi["doc_id"], phi["vec"]):
+        log_phi[b * tb : (b + 1) * tb] = np.asarray(vec).reshape(-1, num_topics)
+    return log_phi
 
 
 @dataclass
@@ -207,7 +276,7 @@ def _estep_kernel(
         V1 = elog_beta.shape[0]
         phi_acc = np.full((V1, K), -np.inf) if learning else None
         alpha_ss = np.zeros(K)
-        ll_partial = 0.0
+        ll_partial = n_docs = n_tokens_all = 0.0
         seen_any = False
 
         for pdf in batches:
@@ -256,6 +325,8 @@ def _estep_kernel(
             ll_gamma = gammaln(gamma).sum(axis=1) - gammaln(sum_gamma)
             doc_ll = l_alpha + ll_gamma + ll_phi
             ll_partial += float(doc_ll.sum())
+            n_docs += B
+            n_tokens_all += float(n_tokens.sum())
             alpha_ss += (
                 digamma(gamma) - digamma(sum_gamma)[:, None]
             ).sum(axis=0)
@@ -283,75 +354,28 @@ def _estep_kernel(
 
         if not seen_any:
             return
-        tail = {
-            "kind": [],
-            "doc_id": [],
-            "term_ids": [],
-            "term_counts": [],
-            "vec": [],
-            "ll": [],
-        }
-        if learning:
-            nonzero = np.where(~np.all(np.isneginf(phi_acc), axis=1))[0]
-            for t in nonzero:
-                tail["kind"].append("phi")
-                tail["doc_id"].append(int(t))
-                tail["term_ids"].append(None)
-                tail["term_counts"].append(None)
-                tail["vec"].append([float(x) for x in phi_acc[t]])
-                tail["ll"].append(None)
-        for kind, vec in (
-            ("alpha", [float(x) for x in alpha_ss]),
-            ("elbo", [ll_partial]),
-        ):
-            tail["kind"].append(kind)
-            tail["doc_id"].append(-1)
-            tail["term_ids"].append(None)
-            tail["term_counts"].append(None)
-            tail["vec"].append(vec)
-            tail["ll"].append(None)
-        yield pd.DataFrame(tail)
+        tail = _partials_frame(
+            [phi_acc] if learning else [],
+            alpha_ss,
+            [ll_partial, n_docs, n_tokens_all],
+        ).assign(term_ids=None, term_counts=None, ll=None)
+        yield tail[_ESTEP_SCHEMA.fieldNames()]
 
     return run
 
 
-def _mstep_beta(
-    phi_rows: list,
-    num_terms: int,
-    num_topics: int,
-    log_eta: np.ndarray | None,
-) -> np.ndarray:
+def _mstep_beta(log_phi: np.ndarray, log_eta: np.ndarray | None) -> np.ndarray:
     """M-step finalization on the model-sized matrix
     (TermReducer.java:157-235 semantics): λ_kv = logaddexp(log η_kv,
     logφ_kv), then E[log β] = ψ(e^λ) − ψ(Σ_v e^λ).
 
-    ``phi_rows`` is either the relationally-combined tall form
-    [(term_id, topic, log_phi)] or partition-partial K-vectors
-    [(term_id, vec)] (the polylda path) — partials are logaddexp-merged
-    here.
+    ``log_phi`` is the combined (V+1, K) log-φ-sum matrix
+    (``phi_matrix``), −inf for terms no document used.
     """
-    K = num_topics
-    lam = np.full((num_terms + 1, K), -np.inf)
-    for row in phi_rows:
-        if len(row) == 3:
-            term_id, topic, v = row
-            lam[term_id, topic] = np.logaddexp(lam[term_id, topic], v)
-            continue
-        term_id, vec = row
-        contrib = np.asarray(vec)
-        cur = lam[term_id]
-        hi = np.maximum(cur, contrib)
-        lo = np.minimum(cur, contrib)
-        with np.errstate(invalid="ignore"):
-            merged = hi + np.log1p(np.exp(lo - hi))
-        lam[term_id] = np.where(np.isneginf(cur), contrib, merged)
-
-    if log_eta is None:
-        log_eta = np.full((num_terms + 1, K), DEFAULT_LOG_ETA)
-    lam = np.logaddexp(log_eta, lam)
+    lam = np.logaddexp(DEFAULT_LOG_ETA if log_eta is None else log_eta, log_phi)
     lam_exp = np.exp(lam[1:])  # rows 1..V
     norm = lam_exp.sum(axis=0)  # (K,)
-    elog = np.full((num_terms + 1, K), DEFAULT_LOG_ETA)
+    elog = np.full(log_phi.shape, DEFAULT_LOG_ETA)
     elog[1:] = digamma(lam_exp) - digamma(norm)[None, :]
     return elog
 
@@ -466,59 +490,14 @@ def train(
         out = inp.mapInPandas(kernel, schema=_ESTEP_SCHEMA)
         out = out.persist()
 
-        # One unified stats pull (the reference's kind-branched
-        # combiner, TermCombiner.java:19-35): phi partials combine by
-        # logsumexp, alpha/elbo partials by plain sum, all in one
-        # relational pass → ONE collect of model-sized rows per
-        # iteration.  With P partitions the partials are ≤ P×(V+2)
-        # rows; the shuffle reduces them to V×K + K + 1 before any
-        # driver pull.
-        stats = out.filter(F.col("kind") != "doc").select(
-            "kind",
-            F.col("doc_id").cast("int").alias("id"),
-            F.posexplode("vec").alias("pos", "v"),
-        )
-        # Stable logsumexp in ONE shuffle: each (kind, id, pos) key has
-        # at most P partition partials (P = input partitions), so
-        # collect_list-ing them into a ≤P-element array and folding the
-        # LSE with codegen array ops beats the former two-shuffle
-        # groupBy(max) + re-join(sub/exp/sum) plan — the V×K-keyed
-        # shuffle runs once instead of twice and no V×K×P join ever
-        # materializes.  The array stays bounded by cluster parallelism
-        # (it is per-key PARTIAL count, not data volume), so this holds
-        # at 100 TB: P=10⁴ tasks → ≤10⁴ doubles per key transiently.
-        combined = (
-            stats.groupBy("kind", "id", "pos")
-            .agg(F.collect_list("v").alias("vs"), F.sum("v").alias("s"))
-            .withColumn("__max", F.array_max("vs"))
-            .select(
-                "kind",
-                "id",
-                "pos",
-                (
-                    F.col("__max")
-                    + F.log(
-                        F.aggregate(
-                            "vs",
-                            F.lit(0.0),
-                            lambda acc, x: acc + F.exp(x - F.col("__max")),
-                        )
-                    )
-                ).alias("lse"),
-                "s",
-            )
-            .collect()
-        )
-        phi_rows = []
-        alpha_ss = np.zeros(K)
-        elbo = 0.0
-        for r in combined:
-            if r["kind"] == "phi":
-                phi_rows.append((r["id"], r["pos"], r["lse"]))
-            elif r["kind"] == "alpha":
-                alpha_ss[r["pos"]] += r["s"]
-            else:  # elbo
-                elbo += r["s"]
+        # One stats pull per iteration: the partitions' dense φ term
+        # blocks and α/ELBO partials reduce block-wise on the executors
+        # (≤ P rows per block for P input partitions), so the shuffle
+        # moves about P×V×K doubles in a few large rows and the driver
+        # receives V×K doubles at any P.
+        stats = combine_partials(out)
+        alpha_ss = partial_sum(stats, "alpha", K)
+        elbo = float(partial_sum(stats, "elbo", 3)[0])
 
         next_gamma = ckpt_gc.cut(  # D×K doubles; cuts lineage
             out.filter(F.col("kind") == "doc").select(
@@ -534,7 +513,9 @@ def train(
         gamma_df = next_gamma
 
         # M-step: beta from phi stats; alpha by Newton-Raphson.
-        state.elog_beta = _mstep_beta(phi_rows, num_terms, K, log_eta)
+        state.elog_beta = _mstep_beta(
+            phi_matrix(stats, num_terms + 1, K), log_eta
+        )
         if truncate_beta is not None and truncate_beta < num_terms:
             # The reference designed (then disabled) approximate top-k
             # beta to shrink the per-mapper model

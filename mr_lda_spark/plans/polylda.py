@@ -29,7 +29,14 @@ from mr_lda_spark.operators.lifecycle import (
     ReliableCheckpointSweeper,
     cut_corpus_lineage,
 )
-from mr_lda_spark.plans.lda import init_elog_beta, _mstep_beta
+from mr_lda_spark.plans.lda import (
+    _mstep_beta,
+    _partials_frame,
+    combine_partials,
+    init_elog_beta,
+    partial_sum,
+    phi_matrix,
+)
 
 _POLY_ESTEP_SCHEMA = T.StructType(
     [
@@ -125,6 +132,7 @@ def _poly_estep_kernel(
             [np.full(eb.shape, -np.inf) for eb in elog_betas] if learning else None
         )
         alpha_ss = np.zeros(K)
+        ll_partial = n_docs = n_tokens = 0.0
         seen = False
 
         for pdf in batches:
@@ -219,6 +227,9 @@ def _poly_estep_kernel(
             ll_gamma = gammaln(gamma).sum(axis=1) - gammaln(sum_gamma)
             doc_ll = l_alpha + ll_gamma + ll_phi
             alpha_ss += (digamma(gamma) - digamma(sum_gamma)[:, None]).sum(axis=0)
+            ll_partial += float(doc_ll.sum())
+            n_docs += B
+            n_tokens += float(tok_totals[keep].sum())
 
             if learning:
                 for lang in range(L):
@@ -246,30 +257,12 @@ def _poly_estep_kernel(
 
         if not seen:
             return
-        tail = {k: [] for k in (
-            "kind", "doc_id", "lang", "lang_term_ids",
-            "lang_term_counts", "vec", "ll",
-        )}
-        if learning:
-            for lang in range(L):
-                acc = phi_accs[lang]
-                nonzero = np.where(~np.all(np.isneginf(acc), axis=1))[0]
-                for t in nonzero:
-                    tail["kind"].append("phi")
-                    tail["doc_id"].append(int(t))
-                    tail["lang"].append(lang)
-                    tail["lang_term_ids"].append(None)
-                    tail["lang_term_counts"].append(None)
-                    tail["vec"].append([float(x) for x in acc[t]])
-                    tail["ll"].append(None)
-        tail["kind"].append("alpha")
-        tail["doc_id"].append(-1)
-        tail["lang"].append(-1)
-        tail["lang_term_ids"].append(None)
-        tail["lang_term_counts"].append(None)
-        tail["vec"].append([float(x) for x in alpha_ss])
-        tail["ll"].append(None)
-        yield pd.DataFrame(tail)
+        tail = _partials_frame(
+            phi_accs if learning else [],
+            alpha_ss,
+            [ll_partial, n_docs, n_tokens],
+        ).assign(lang_term_ids=None, lang_term_counts=None, ll=None)
+        yield tail[_POLY_ESTEP_SCHEMA.fieldNames()]
 
     return run
 
@@ -288,16 +281,15 @@ def train_poly(
     corpus_checkpoint: bool | str = "local",
 ) -> tuple[DataFrame, PolyLdaState]:
     """EM loop for polylingual LDA; mirrors plans.lda.train but with a
-    (lang, term, topic)-keyed M-step (the TripleOfInts shuffle key of
-    polylda/DocumentMapper.java:31-32 becomes a lang-partitioned
-    aggregation).  ``corpus_checkpoint`` selects the lineage-cut tier
+    (lang, block)-keyed combine (the TripleOfInts shuffle key of
+    polylda/DocumentMapper.java:31-32 becomes per-language φ term
+    blocks).  ``corpus_checkpoint`` selects the lineage-cut tier
     ("local" / "reliable" — ``operators/lifecycle.cut_corpus_lineage``)
     for the corpus and the per-iteration carried γ."""
     from mr_lda_spark.session import ensure_package_shipped
 
     ensure_package_shipped(spark)
     K = num_topics
-    L = len(num_terms_per_lang)
     alpha = (
         np.full(K, 1.0 / K)
         if alpha_init is None
@@ -357,51 +349,12 @@ def train_poly(
             inp = static_corpus.join(gamma_df, "doc_id", "left")
         out = inp.mapInPandas(kernel, schema=_POLY_ESTEP_SCHEMA).persist()
 
-        # Reduce the per-partition φ partials ON CLUSTER before any
-        # driver pull: each (lang, term, topic) key has ≤P partials
-        # (P = input partitions), so the collect_list array is bounded
-        # by parallelism and the stable LSE folds in codegen — the
-        # driver then collects V×K scalars instead of P×V×K vectors
-        # (same single-shuffle shape as the mono plan's combine,
-        # plans/lda.py).
-        phi_by_lang: dict[int, list] = {lang: [] for lang in range(L)}
-        phi_scal = (
-            out.filter(F.col("kind") == "phi")
-            .select(
-                "lang",
-                F.col("doc_id").cast("int").alias("id"),
-                F.posexplode("vec").alias("pos", "v"),
-            )
-            .groupBy("lang", "id", "pos")
-            .agg(F.collect_list("v").alias("vs"))
-            .withColumn("__max", F.array_max("vs"))
-            .select(
-                "lang",
-                "id",
-                "pos",
-                (
-                    F.col("__max")
-                    + F.log(
-                        F.aggregate(
-                            "vs",
-                            F.lit(0.0),
-                            lambda acc, x: acc + F.exp(x - F.col("__max")),
-                        )
-                    )
-                ).alias("lse"),
-            )
-            .collect()
-        )
-        for r in phi_scal:
-            phi_by_lang[r["lang"]].append((r["id"], r["pos"], r["lse"]))
-        alpha_ss = np.sum(
-            [
-                np.asarray(r["vec"])
-                for r in out.filter(F.col("kind") == "alpha").select("vec").collect()
-            ],
-            axis=0,
-        )
-        elbo = out.filter(F.col("kind") == "doc").agg(F.sum("ll")).collect()[0][0]
+        # One combine pass (plans/lda.combine_partials) keyed by
+        # (kind, lang, block): per-language φ blocks, α and ELBO
+        # partials reduce on the executors in a single job.
+        stats = combine_partials(out, ("kind", "lang", "doc_id"))
+        alpha_ss = partial_sum(stats, "alpha", K)
+        elbo = float(partial_sum(stats, "elbo", 3)[0])
         next_gamma = ckpt_gc.cut(
             out.filter(F.col("kind") == "doc").select(
                 "doc_id", F.col("vec").alias("gamma")
@@ -414,8 +367,10 @@ def train_poly(
         gamma_df = next_gamma
 
         state.elog_betas = [
-            _mstep_beta(phi_by_lang[lang], num_terms_per_lang[lang], K, None)
-            for lang in range(L)
+            _mstep_beta(
+                phi_matrix(stats[stats["lang"] == lang], v + 1, K), None
+            )
+            for lang, v in enumerate(num_terms_per_lang)
         ]
         state.alpha = update_alpha_vector(num_docs, state.alpha, alpha_ss)
         state.elbo = float(elbo)

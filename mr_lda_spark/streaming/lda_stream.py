@@ -20,7 +20,6 @@ loop's broadcast model; the corpus-sized work stays in executors.
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -33,7 +32,9 @@ from mr_lda_spark.plans.lda import (
     DEFAULT_LOG_ETA,
     _ESTEP_SCHEMA,
     _estep_kernel,
-
+    combine_partials,
+    partial_sum,
+    phi_matrix,
 )
 
 
@@ -102,44 +103,24 @@ def process_micro_batch(
         )
     out = batch_corpus_doc.select(
         "doc_id", "term_ids", "term_counts", "gamma"
-    ).mapInPandas(kernel, schema=_ESTEP_SCHEMA).persist()
+    ).mapInPandas(kernel, schema=_ESTEP_SCHEMA)
 
-    phi = out.filter(F.col("kind") == "phi").select(
-        F.col("doc_id").cast("int").alias("term_id"),
-        F.posexplode("vec").alias("topic", "log_phi"),
-    )
-    from mr_lda_spark.functions.logmath import logsumexp_agg
-
-    rows = logsumexp_agg(phi, ["term_id", "topic"], "log_phi", "lse").collect()
-    n_docs = out.filter(F.col("kind") == "doc").count()
-    ll = out.filter(F.col("kind") == "doc").agg(F.sum("ll")).collect()[0][0]
-    n_tokens = (
-        batch_corpus_doc.select(
-            F.aggregate(
-                F.transform("term_counts", lambda c: c.cast("double")),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ).alias("n")
-        ).agg(F.sum("n")).collect()[0][0]
-    )
-    out.unpersist()
+    stats = combine_partials(out)
     eb_bc.unpersist()
+    ll, n_docs, n_tokens = partial_sum(stats, "elbo", 3)
     if n_docs == 0:
         return model
 
     # λ̂: batch stats rescaled as if the whole corpus looked like it.
-    stats = np.zeros_like(model.lam)
-    for r in rows:
-        stats[r["term_id"], r["topic"]] = math.exp(r["lse"])
     scale = model.corpus_size_estimate / n_docs
     eta_prior = 1e-3  # symmetric topic-word prior
-    lam_hat = eta_prior + scale * stats
+    lam_hat = eta_prior + scale * np.exp(phi_matrix(stats, len(model.lam), K))
 
     rho = (model.tau0 + model.t) ** (-model.kappa)
     model.lam = (1.0 - rho) * model.lam + rho * lam_hat
     model.lam[0] = 1e-12
     model.t += 1
-    model.docs_seen += n_docs
+    model.docs_seen += int(n_docs)
     if n_tokens:
         model.batch_perplexities.append(float(np.exp(-ll / n_tokens)))
     return model

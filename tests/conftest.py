@@ -5,6 +5,25 @@ import pytest
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
+_SLOW_DESELECTED = pytest.StashKey[int]()
+
+
+def pytest_deselected(items):
+    """Count the tests the default ``-m "not slow"`` selection drops."""
+    if items:
+        stash = items[0].config.stash
+        slow = sum(1 for item in items if item.get_closest_marker("slow"))
+        stash[_SLOW_DESELECTED] = stash.get(_SLOW_DESELECTED, 0) + slow
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    n = config.stash.get(_SLOW_DESELECTED, 0)
+    if n and config.getoption("markexpr") == "not slow":
+        terminalreporter.write_line(
+            f'{n} slow tests deselected by -m "not slow"; full suite: '
+            'python -m pytest tests/ -m ""'
+        )
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -17,6 +17,33 @@ def dictionary(spark, documents):
     return parse.build_dictionary(parse.term_stats(tokens), documents.count())
 
 
+def test_process_micro_batch_static(spark):
+    """One online step on a small static doc-form batch (empty doc
+    included): λ stays finite and positive and the counters advance."""
+    num_terms = 12
+    batch = spark.createDataFrame(
+        [
+            (0, [1, 2, 5], [3, 1, 2]),
+            (1, [2, 7, 12], [1, 4, 1]),
+            (2, [], []),
+            (3, [1, 9], [2, 2]),
+        ],
+        "doc_id long, term_ids array<int>, term_counts array<int>",
+    )
+    model = lda_stream.init_online_model(num_terms, K, corpus_size_estimate=40, seed=1)
+    lam0 = model.lam.copy()
+    model = lda_stream.process_micro_batch(batch, model, max_gamma_iter=5)
+    assert (model.t, model.docs_seen) == (1, 3)
+    assert np.all(np.isfinite(model.lam)) and np.all(model.lam > 0)
+    # Words of the batch gain mass relative to the decayed prior.
+    used = [1, 2, 5, 7, 9, 12]
+    unused = [3, 4, 6, 8, 10, 11]
+    gain = (model.lam / lam0)[1:].sum(axis=1)
+    assert gain[np.array(used) - 1].min() > gain[np.array(unused) - 1].max()
+    assert len(model.batch_perplexities) == 1
+    assert np.isfinite(model.batch_perplexities[0])
+
+
 @pytest.mark.slow
 def test_online_lda_from_stream(spark, documents, dictionary):
     model = lda_stream.train_online_from_stream(

@@ -129,8 +129,8 @@ def test_parse_shared_single_token_cache(spark, sf_dir):
     from mr_lda_spark import queries_registry as qr
 
     qr._PARSE_CACHE.clear()
+    docs, _, tokens_raw, tokens_stop, dictionary = qr._parse_shared(spark, sf_dir)
     try:
-        docs, _, tokens_raw, tokens_stop, _ = qr._parse_shared(spark, sf_dir)
         assert tokens_raw.storageLevel.useMemory  # the one token cache
         assert not tokens_stop.storageLevel.useMemory  # a view, not a cache
         got = sorted(map(tuple, tokens_stop.collect()))
@@ -140,4 +140,7 @@ def test_parse_shared_single_token_cache(spark, sf_dir):
         assert got == want
     finally:
         qr._PARSE_CACHE.clear()
-        spark.catalog.clearCache()  # release the session-scoped persists
+        # Release only the two persists this call made; other tests'
+        # caches on the shared session stay.
+        tokens_raw.unpersist()
+        dictionary.unpersist()
