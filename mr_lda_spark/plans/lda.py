@@ -58,7 +58,7 @@ DEFAULT_LOG_ETA = math.log(1e-12)  # Settings.java:58
 # dense term block of a partition's log-phi-sum matrix (doc_id = block
 # index, vec = the block's (TB, K) slice, row-major); 'alpha' rows carry
 # one partition's alpha-sufficient-statistic K-vector; 'elbo' rows carry
-# one partition's [ELBO, docs, tokens].
+# one partition's [ELBO, docs, tokens, term cells, padded cells].
 _ESTEP_SCHEMA = T.StructType(
     [
         T.StructField("kind", T.StringType()),
@@ -74,49 +74,59 @@ _ESTEP_SCHEMA = T.StructType(
 # leaves the kernel as a few rows, small enough for Arrow batches.
 _PHI_BLOCK_BYTES = 1 << 20
 
+# E-step sub-batches (``_length_groups``): a group's padded (g, n_max, K)
+# float64 tensor stays under _GROUP_BYTES, and a group closes before a
+# document shorter than _GROUP_MIN_FILL × its n_max, so at least that
+# share of every group's padded cells holds a term.
+_GROUP_BYTES = 8 << 20
+_GROUP_MIN_FILL = 0.5
+
 
 def _phi_block_terms(num_topics: int) -> int:
     """TB: terms per 'phi' block row for K topics."""
     return max(1, _PHI_BLOCK_BYTES // (8 * num_topics))
 
 
-def _partials_frame(phi_accs: list, alpha_ss: np.ndarray, elbo: list) -> pd.DataFrame:
-    """The E-step kernel's per-partition tail (kind, lang, doc_id, vec):
-    each language's log-φ accumulator as dense term blocks, skipping
-    blocks no document touched, then one 'alpha' row and one 'elbo' row
-    ([ELBO, docs, tokens] of the partition)."""
+def _partials_frame(phi_acc, alpha_ss: np.ndarray, totals) -> pd.DataFrame:
+    """The E-step kernel's per-partition tail (kind, doc_id, vec): the
+    log-φ accumulator as dense term blocks, skipping blocks no document
+    touched (none without ``phi_acc``), then one 'alpha' row and one
+    'elbo' row ([ELBO, docs, tokens, term cells, padded cells] of the
+    partition)."""
     rows = []
-    for lang, acc in enumerate(phi_accs):
-        tb = _phi_block_terms(acc.shape[1])
-        for b0 in range(0, len(acc), tb):
-            block = acc[b0 : b0 + tb]
+    if phi_acc is not None:
+        tb = _phi_block_terms(phi_acc.shape[1])
+        for b0 in range(0, len(phi_acc), tb):
+            block = phi_acc[b0 : b0 + tb]
             if not np.isneginf(block).all():
-                rows.append(("phi", lang, b0 // tb, block.ravel()))
-    rows.append(("alpha", -1, -1, alpha_ss))
-    rows.append(("elbo", -1, -1, np.asarray(elbo, dtype=np.float64)))
-    return pd.DataFrame(rows, columns=["kind", "lang", "doc_id", "vec"])
+                rows.append(("phi", b0 // tb, block.ravel()))
+    rows.append(("alpha", -1, alpha_ss))
+    rows.append(("elbo", -1, np.asarray(totals, dtype=np.float64)))
+    return pd.DataFrame(rows, columns=["kind", "doc_id", "vec"])
 
 
-def combine_partials(out: DataFrame, keys: tuple = ("kind", "doc_id")) -> pd.DataFrame:
+def combine_partials(out: DataFrame) -> pd.DataFrame:
     """Reduce the E-step's per-partition partials across partitions on
     the executors (the reference's kind-branched combiner,
     TermCombiner.java:19-35) and pull the result to the driver.
 
-    One group per ``keys`` value — ``(kind, block)``, or
-    ``(kind, lang, block)`` for PolyLDA: 'phi' term blocks merge by an
+    One group per ``(kind, block)``: 'phi' term blocks merge by an
     elementwise logaddexp, 'alpha'/'elbo' vectors by sum.  Each group
     holds at most one row per input partition, and the driver receives
     about V/TB + 2 rows, i.e. V×K doubles whatever the partition count.
     """
-    keys = list(keys)
 
     def reduce(pdf: pd.DataFrame) -> pd.DataFrame:
         vecs = np.stack(pdf["vec"].to_numpy())
         fold = np.logaddexp.reduce if pdf["kind"].iat[0] == "phi" else np.sum
-        return pdf[keys].iloc[:1].assign(vec=[fold(vecs, axis=0)])
+        return pdf[["kind", "doc_id"]].iloc[:1].assign(vec=[fold(vecs, axis=0)])
 
-    partials = out.filter(F.col("kind") != "doc").select(*keys, "vec")
-    return partials.groupBy(*keys).applyInPandas(reduce, partials.schema).toPandas()
+    partials = out.filter(F.col("kind") != "doc").select("kind", "doc_id", "vec")
+    return (
+        partials.groupBy("kind", "doc_id")
+        .applyInPandas(reduce, partials.schema)
+        .toPandas()
+    )
 
 
 def partial_sum(stats: pd.DataFrame, kind: str, size: int) -> np.ndarray:
@@ -150,6 +160,8 @@ class LdaState:
     iter_seconds: list = field(default_factory=list)
     perplexity_history: list = field(default_factory=list)
     total_tokens: float = 0.0
+    # Per iteration: the E-step's term cells / padded cells.
+    pad_efficiency: list = field(default_factory=list)
 
 
 def init_elog_beta(num_terms: int, num_topics: int, seed: int) -> np.ndarray:
@@ -182,7 +194,7 @@ def numpy_sweep_backend(
     gamma_tol: float,
 ):
     """Default (CPU/numpy) coordinate-ascent sweep kernel: runs the
-    per-doc γ/φ fixed-point iterations for one padded Arrow batch.
+    per-doc γ/φ fixed-point iterations for one padded sub-batch.
 
     This is the engine's compute-backend extension point.  The whole
     E-step hot loop is expressed as dense tensor ops on
@@ -194,21 +206,35 @@ def numpy_sweep_backend(
     the backend callable is shipped to executors via the normal
     closure-serialization path, one resolve per task.
 
+    The backend receives length-homogeneous sub-batches: the E-step
+    splits each Arrow batch by ``_length_groups`` (documents sorted by
+    length, each group under a fixed byte budget) and pads every group
+    to its own n_max, so B and n_max vary from call to call.
+
     Inputs: ``elb`` (B, n_max, K) E[log β] gathered per token slot;
     ``counts_pad`` (B, n_max) token counts, 0 on padding; ``gamma``
     (B, K) the warm-start state (mutated freely); ``alpha`` (K,).
     Returns ``(gamma, lpn, phi)`` with ``lpn`` the log-normalized φ of
-    the LAST sweep, both (B, n_max, K).
+    each document's LAST sweep, both (B, n_max, K).  With ``gamma_tol``
+    > 0 a document stops sweeping once its own relative γ change is
+    below it (its γ, lpn and φ freeze), so its result does not depend
+    on which other documents share the sub-batch; the loop ends when
+    every document has stopped.
     """
-    lpn = None
-    phi = None
+    B = len(gamma)
+    act = np.arange(B)  # documents still sweeping
+    lpn = phi = None
     for _ in range(max_gamma_iter):
-        dg = digamma(gamma)  # (B, K)
-        lp = elb + dg[:, None, :]
+        sub = slice(None) if act.size == B else act
+        lp = elb[sub] + digamma(gamma[sub])[:, None, :]
         m = lp.max(axis=2, keepdims=True)
         norm = m + np.log(np.exp(lp - m).sum(axis=2, keepdims=True))
-        lpn = lp - norm  # (B, n_max, K)
-        phi = np.exp(lpn)
+        lpn_s = lp - norm  # (B_active, n_max, K)
+        phi_s = np.exp(lpn_s)
+        if act.size == B:
+            lpn, phi = lpn_s, phi_s
+        else:
+            lpn[act], phi[act] = lpn_s, phi_s
         # γ = α + Σ_w c_w φ_w — φ is a normalized probability,
         # so the sum is numerically safe in LINEAR space; the
         # log-space logaddexp fold the reference uses
@@ -216,19 +242,102 @@ def numpy_sweep_backend(
         # accumulator itself lives in log space.  Linear form
         # saves a (B, n_max+1, K) concatenate + two exp/log
         # passes per sweep (~1.5× sweep cost at sf0.1).
-        prev_gamma = gamma
-        gamma = alpha[None, :] + np.einsum(
-            "bn,bnk->bk", counts_pad, phi
-        )
-        if gamma_tol > 0.0 and np.max(
-            np.abs(gamma - prev_gamma) / prev_gamma
-        ) < gamma_tol:
-            # Convergence-gated sweeps (SURVEY §7.3): the
-            # reference burns a fixed 100 sweeps per doc per
-            # iteration (Settings.java:54) — warm-started
-            # iterations converge in a handful.
+        new_gamma = alpha[None, :] + np.einsum("bn,bnk->bk", counts_pad[sub], phi_s)
+        # Convergence-gated sweeps (SURVEY §7.3): the reference burns
+        # a fixed 100 sweeps per doc per iteration (Settings.java:54)
+        # — warm-started iterations converge in a handful.
+        done = np.max(np.abs(new_gamma - gamma[sub]) / gamma[sub], axis=1) < gamma_tol
+        gamma[sub] = new_gamma
+        act = act[~done]
+        if not act.size:
             break
     return gamma, lpn, phi
+
+
+def _length_groups(lens: np.ndarray, num_topics: int) -> list:
+    """Split one batch's non-empty documents (``lens``: each one's
+    padded width, 0 = empty) into length-sorted sub-batches, longest
+    first.  A group closes when one more document would take its
+    (g, n_max, K) float64 tensor past ``_GROUP_BYTES``, or when the
+    next document is shorter than ``_GROUP_MIN_FILL`` × the group's
+    n_max; a document wider than the budget is a group on its own.
+    Returns arrays of batch row indices, each group's widest first."""
+    order = np.argsort(-lens, kind="stable")
+    order = order[lens[order] > 0]
+    groups, start = [], 0
+    for i in range(1, len(order) + 1):
+        width = lens[order[start]]
+        if (
+            i == len(order)
+            or lens[order[i]] < _GROUP_MIN_FILL * width
+            or (i - start + 1) * width * num_topics * 8 > _GROUP_BYTES
+        ):
+            groups.append(order[start:i])
+            start = i
+    return groups
+
+
+def _pad(arrays: list, width: int, fill=0.0, dtype=np.float64) -> np.ndarray:
+    """Stack 1-D (or (n, K)) arrays into one (g, width[, K]) array,
+    ``fill`` past each array's end."""
+    lens = np.array([len(a) for a in arrays])
+    out = np.full((len(arrays), width) + np.shape(arrays[0])[1:], fill, dtype)
+    out[np.arange(width) < lens[:, None]] = np.concatenate(arrays)
+    return out
+
+
+def _estep_batch(
+    term_lists, count_lists, carried, alpha, max_gamma_iter, gamma_tol,
+    sweep, gather, on_phi,
+):
+    """One Arrow batch of the E-step, shared by the broadcast, PolyLDA
+    and join kernels (DocumentMapper.java:184-259 semantics per doc).
+
+    The batch's non-empty documents (P7) run through ``sweep`` in
+    ``_length_groups`` sub-batches, each padded to its own n_max.
+    ``gather(rows, terms_pad)`` returns a group's (g, n_max, K)
+    E[log β] slots; ``on_phi(terms, log_phi)``, when learning, folds
+    the group's per-token log c·φ into the partition accumulator.
+    ``carried`` is the batch's γ column (None: every document starts
+    at γ⁰ = α + N/K).
+
+    Returns ``keep`` (the non-empty documents' batch rows, in input
+    order), their γ, doc ELBO and α-statistic terms ψ(γ) − ψ(Σγ), and
+    the batch's [ELBO, docs, tokens, term cells, padded cells].
+    """
+    K = len(alpha)
+    l_alpha = float(gammaln(alpha.sum()) - gammaln(alpha).sum())
+    lens = np.array([t.size for t in term_lists], dtype=np.int64)
+    n_tokens = np.array([c.sum() for c in count_lists], dtype=np.float64)
+    gamma = np.tile(alpha, (len(lens), 1)) + n_tokens[:, None] / K
+    if carried is not None:
+        for i, g in enumerate(carried):
+            if g is not None and len(g) == K:
+                gamma[i] = np.asarray(g, dtype=np.float64)
+    ll_phi = np.zeros(len(lens))
+    padded = 0
+    for rows in _length_groups(lens, K):
+        terms_pad = _pad([term_lists[i] for i in rows], lens[rows[0]], 0, np.int64)
+        counts_pad = _pad([count_lists[i] for i in rows], lens[rows[0]])
+        elb = gather(rows, terms_pad)
+        gamma[rows], lpn, phi = sweep(
+            elb, counts_pad, gamma[rows], alpha, max_gamma_iter, gamma_tol
+        )
+        ll_phi[rows] = (counts_pad[:, :, None] * phi * (elb - lpn)).sum(axis=(1, 2))
+        padded += counts_pad.size
+        if on_phi is not None:
+            valid = counts_pad > 0
+            on_phi(terms_pad[valid], lpn[valid] + np.log(counts_pad[valid])[:, None])
+    keep = np.flatnonzero(lens > 0)
+    gamma = gamma[keep]
+    sum_gamma = gamma.sum(axis=1)
+    ll_gamma = gammaln(gamma).sum(axis=1) - gammaln(sum_gamma)
+    doc_ll = l_alpha + ll_gamma + ll_phi[keep]
+    totals = [doc_ll.sum(), len(keep), n_tokens.sum(), lens.sum(), padded]
+    return (
+        keep, gamma, doc_ll, digamma(gamma) - digamma(sum_gamma)[:, None],
+        np.asarray(totals, dtype=np.float64),
+    )
 
 
 def _estep_kernel(
@@ -261,7 +370,6 @@ def _estep_kernel(
       doc ELBO = L_α + Σ lnΓ(γ) − lnΓ(Σγ) + ELBO_φ
     """
     K = len(alpha)
-    l_alpha = float(gammaln(alpha.sum()) - gammaln(alpha).sum())
     elog_beta_ref = elog_beta
     sweep = sweep_backend if sweep_backend is not None else numpy_sweep_backend
 
@@ -273,71 +381,26 @@ def _estep_kernel(
             if hasattr(elog_beta_ref, "value")
             else elog_beta_ref
         )
-        V1 = elog_beta.shape[0]
-        phi_acc = np.full((V1, K), -np.inf) if learning else None
+        phi_acc = np.full((elog_beta.shape[0], K), -np.inf) if learning else None
         alpha_ss = np.zeros(K)
-        ll_partial = n_docs = n_tokens_all = 0.0
-        seen_any = False
+        totals = np.zeros(5)
 
         for pdf in batches:
-            # ---- Batch-vectorized E-step: pad every doc in the Arrow
-            # batch to (B, n_max) and run all coordinate-ascent sweeps
-            # as whole-batch tensor ops (no per-doc Python loop).
-            term_lists = [
-                np.asarray(t, dtype=np.int64) for t in pdf["term_ids"]
-            ]
-            count_lists = [
-                np.asarray(c, dtype=np.float64) for c in pdf["term_counts"]
-            ]
-            keep = [i for i, t in enumerate(term_lists) if t.size > 0]  # P7
-            if not keep:
-                continue
-            seen_any = True
-            B = len(keep)
-            lens = np.array([term_lists[i].size for i in keep])
-            n_max = int(lens.max())
-            terms_pad = np.zeros((B, n_max), dtype=np.int64)
-            counts_pad = np.zeros((B, n_max))
-            for j, i in enumerate(keep):
-                terms_pad[j, : lens[j]] = term_lists[i]
-                counts_pad[j, : lens[j]] = count_lists[i]
-            valid = counts_pad > 0
-            with np.errstate(divide="ignore"):
-                log_counts = np.where(valid, np.log(counts_pad), -np.inf)
-
-            n_tokens = counts_pad.sum(axis=1)  # (B,)
-            gamma = np.tile(alpha, (B, 1)) + n_tokens[:, None] / K
-            if "gamma" in pdf.columns and not random_start_gamma:
-                for j, i in enumerate(keep):
-                    g = pdf["gamma"].iloc[i]
-                    if g is not None and len(g) == K:
-                        gamma[j] = np.asarray(g, dtype=np.float64)
-
-            elb = elog_beta[terms_pad]  # (B, n_max, K)
-            gamma, lpn, phi = sweep(
-                elb, counts_pad, gamma, alpha, max_gamma_iter, gamma_tol
-            )
-            ll_phi = (
-                counts_pad[:, :, None] * phi * (elb - lpn)
-            ).sum(axis=(1, 2))
-
-            sum_gamma = gamma.sum(axis=1)
-            ll_gamma = gammaln(gamma).sum(axis=1) - gammaln(sum_gamma)
-            doc_ll = l_alpha + ll_gamma + ll_phi
-            ll_partial += float(doc_ll.sum())
-            n_docs += B
-            n_tokens_all += float(n_tokens.sum())
-            alpha_ss += (
-                digamma(gamma) - digamma(sum_gamma)[:, None]
-            ).sum(axis=0)
-
-            if learning:
+            keep, gamma, doc_ll, alpha_terms, batch_totals = _estep_batch(
+                [np.asarray(t, dtype=np.int64) for t in pdf["term_ids"]],
+                [np.asarray(c, dtype=np.float64) for c in pdf["term_counts"]],
+                None if random_start_gamma or "gamma" not in pdf.columns
+                else pdf["gamma"],
+                alpha, max_gamma_iter, gamma_tol, sweep,
+                lambda rows, terms_pad: elog_beta[terms_pad],
                 # In-mapper combine (A3): indexed log-space scatter-add
-                # of this batch's log-phi into the partition accumulator.
-                contrib = (lpn + log_counts[:, :, None])[valid]  # (nnz, K)
-                flat_terms = terms_pad[valid]
-                np.logaddexp.at(phi_acc, flat_terms, contrib)
-
+                # into the partition accumulator.
+                (lambda t, v: np.logaddexp.at(phi_acc, t, v)) if learning else None,
+            )
+            if not keep.size:
+                continue
+            alpha_ss += alpha_terms.sum(axis=0)
+            totals += batch_totals
             # Doc rows carry ONLY gamma + ll — the static term arrays
             # never round-trip back through Arrow (the corpus is
             # checkpointed once and joined to gamma each iteration).
@@ -352,13 +415,11 @@ def _estep_kernel(
                 }
             )
 
-        if not seen_any:
+        if not totals[1]:
             return
-        tail = _partials_frame(
-            [phi_acc] if learning else [],
-            alpha_ss,
-            [ll_partial, n_docs, n_tokens_all],
-        ).assign(term_ids=None, term_counts=None, ll=None)
+        tail = _partials_frame(phi_acc, alpha_ss, totals).assign(
+            term_ids=None, term_counts=None, ll=None
+        )
         yield tail[_ESTEP_SCHEMA.fieldNames()]
 
     return run
@@ -497,7 +558,8 @@ def train(
         # receives V×K doubles at any P.
         stats = combine_partials(out)
         alpha_ss = partial_sum(stats, "alpha", K)
-        elbo = float(partial_sum(stats, "elbo", 3)[0])
+        totals = partial_sum(stats, "elbo", 5)
+        elbo = float(totals[0])
 
         next_gamma = ckpt_gc.cut(  # D×K doubles; cuts lineage
             out.filter(F.col("kind") == "doc").select(
@@ -542,6 +604,8 @@ def train(
         state.elbo = float(elbo)
         state.history.append(float(elbo))
         state.iter_seconds.append(round(_time.perf_counter() - iter_t0, 3))
+        if totals[4] > 0:
+            state.pad_efficiency.append(float(totals[3] / totals[4]))
         if state.total_tokens > 0:
             # Per-token perplexity from the variational bound — the
             # standard held-out-style metric the reference tracks via

@@ -38,12 +38,19 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mr_lda_spark.functions.alpha import update_alpha_vector
-from mr_lda_spark.functions.special import digamma, gammaln
+from mr_lda_spark.functions.special import digamma
 from mr_lda_spark.operators.lifecycle import (
     ReliableCheckpointSweeper,
     cut_corpus_lineage,
 )
-from mr_lda_spark.plans.lda import DEFAULT_LOG_ETA, LdaState, init_elog_beta
+from mr_lda_spark.plans.lda import (
+    DEFAULT_LOG_ETA,
+    LdaState,
+    _estep_batch,
+    _pad,
+    init_elog_beta,
+    numpy_sweep_backend,
+)
 
 _JOIN_ESTEP_SCHEMA = T.StructType(
     [
@@ -93,20 +100,21 @@ def _join_estep_kernel(
     (terms, counts, betas aligned arrays).  ``learning=False`` is the
     reference's -test mode (VariationalInferenceOptions.java:166-178):
     γ-only sweeps, no φ statistics, no α rows — only doc rows flow.
+    Each Arrow batch runs through the broadcast path's per-batch E-step
+    (``lda._estep_batch``: length-grouped sub-batches, the
+    ``numpy_sweep_backend`` sweep) with β gathered from the rows.
 
     φ sufficient statistics are combined PARTITION-LOCALLY (the same
     in-mapper-combine move as the broadcast path, plans/lda.py:103):
     instead of one row per (doc, term) — tokens × K doubles into the
     M-step shuffle, twice, because the two-pass logsumexp re-shuffles
-    its input — the kernel folds each batch's per-term logsumexp into
+    its input — the kernel folds each sub-batch's per-term logsumexp into
     a dict and emits one partial row per distinct term per partition.
     Memory stays bounded: the dict flushes to output whenever it
     exceeds ``phi_flush`` terms (so a vocabulary larger than executor
     memory degrades to more partials, never to OOM), and logsumexp of
     partials is associative so the relational combine downstream is
     unchanged."""
-    K = len(alpha)
-    l_alpha = float(gammaln(alpha.sum()) - gammaln(alpha).sum())
 
     def run(batches):
         phi_acc: dict[int, np.ndarray] = {}
@@ -123,68 +131,28 @@ def _join_estep_kernel(
             phi_acc.clear()
             return out
 
+        def fold_phi(terms, log_phi):
+            # Per-term logsumexp within the sub-batch, folded into the
+            # partition-local accumulator (flushed size-bounded).
+            uniq, lse = _segment_lse(terms, log_phi)
+            for t, vec in zip(uniq, lse):
+                prev = phi_acc.get(int(t))
+                phi_acc[int(t)] = vec if prev is None else np.logaddexp(prev, vec)
+
         for pdf in batches:
-            n_docs = len(pdf)
-            if n_docs == 0:
-                continue
-            term_lists = [np.asarray(t, dtype=np.int64) for t in pdf["term_ids"]]
-            count_lists = [np.asarray(c, dtype=np.float64) for c in pdf["term_counts"]]
-            beta_lists = [np.asarray(list(b), dtype=np.float64) for b in pdf["betas"]]
-            keep = [i for i, t in enumerate(term_lists) if t.size > 0]
-            if not keep:
-                continue
-            B = len(keep)
-            lens = np.array([term_lists[i].size for i in keep])
-            n_max = int(lens.max())
-            terms_pad = np.zeros((B, n_max), dtype=np.int64)
-            counts_pad = np.zeros((B, n_max))
-            elb = np.full((B, n_max, K), DEFAULT_LOG_ETA)
-            for j, i in enumerate(keep):
-                terms_pad[j, : lens[j]] = term_lists[i]
-                counts_pad[j, : lens[j]] = count_lists[i]
-                elb[j, : lens[j]] = beta_lists[i]
-            valid = counts_pad > 0
-            with np.errstate(divide="ignore"):
-                log_counts = np.where(valid, np.log(counts_pad), -np.inf)
-
-            n_tokens = counts_pad.sum(axis=1)
-            gamma = np.tile(alpha, (B, 1)) + n_tokens[:, None] / K
-            if "gamma" in pdf.columns:
-                for j, i in enumerate(keep):
-                    g = pdf["gamma"].iloc[i]
-                    if g is not None and len(g) == K:
-                        gamma[j] = np.asarray(g, dtype=np.float64)
-
-            lpn = None
-            phi = None
-            for _ in range(max_gamma_iter):
-                dg = digamma(gamma)
-                lp = elb + dg[:, None, :]
-                m = lp.max(axis=2, keepdims=True)
-                norm = m + np.log(np.exp(lp - m).sum(axis=2, keepdims=True))
-                lpn = lp - norm
-                phi = np.exp(lpn)
-                # γ = α + Σ_w c_w φ_w in linear space (φ is a normalized
-                # probability; same rewrite as plans/lda.py — saves the
-                # per-sweep (B, n_max+1, K) concatenate + logsumexp).
-                prev_gamma = gamma
-                gamma = alpha[None, :] + np.einsum(
-                    "bn,bnk->bk", counts_pad, phi
-                )
-                if gamma_tol > 0.0 and np.max(
-                    np.abs(gamma - prev_gamma) / prev_gamma
-                ) < gamma_tol:
-                    # Convergence-gated sweeps, same batch-max rule as
-                    # the broadcast kernel (plans/lda.py).
-                    break
-            ll_phi = (counts_pad[:, :, None] * phi * (elb - lpn)).sum(
-                axis=(1, 2)
+            betas = [np.asarray(list(b), dtype=np.float64) for b in pdf["betas"]]
+            keep, gamma, doc_ll, alpha_contrib, _ = _estep_batch(
+                [np.asarray(t, dtype=np.int64) for t in pdf["term_ids"]],
+                [np.asarray(c, dtype=np.float64) for c in pdf["term_counts"]],
+                pdf["gamma"] if "gamma" in pdf.columns else None,
+                alpha, max_gamma_iter, gamma_tol, numpy_sweep_backend,
+                lambda rows, terms_pad: _pad(
+                    [betas[i] for i in rows], terms_pad.shape[1], DEFAULT_LOG_ETA
+                ),
+                fold_phi if learning else None,
             )
-            sum_gamma = gamma.sum(axis=1)
-            ll_gamma = gammaln(gamma).sum(axis=1) - gammaln(sum_gamma)
-            doc_ll = l_alpha + ll_gamma + ll_phi
-            alpha_contrib = digamma(gamma) - digamma(sum_gamma)[:, None]
-
+            if not keep.size:
+                continue
             # Doc rows: γ (+ α contribution folded into 'vec2' via a
             # second row kind to stay relational).
             doc_ids = pdf["doc_id"].iloc[keep].astype("int64").values
@@ -206,17 +174,6 @@ def _join_estep_kernel(
                     "ll": 0.0,
                 }
             )
-            # φ stats: per-term logsumexp within the batch, folded into
-            # the partition-local accumulator (flushed size-bounded).
-            contrib = lpn + log_counts[:, :, None]
-            uniq, lse = _segment_lse(
-                terms_pad[valid].astype(np.int64), contrib[valid]
-            )
-            for t, vec in zip(uniq, lse):
-                prev = phi_acc.get(int(t))
-                phi_acc[int(t)] = (
-                    vec if prev is None else np.logaddexp(prev, vec)
-                )
             if len(phi_acc) > phi_flush:
                 yield phi_frame()
         if phi_acc:

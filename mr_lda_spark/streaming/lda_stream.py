@@ -107,7 +107,7 @@ def process_micro_batch(
 
     stats = combine_partials(out)
     eb_bc.unpersist()
-    ll, n_docs, n_tokens = partial_sum(stats, "elbo", 3)
+    ll, n_docs, n_tokens = partial_sum(stats, "elbo", 5)[:3]
     if n_docs == 0:
         return model
 

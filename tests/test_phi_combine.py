@@ -19,10 +19,10 @@ def _partials_df(spark, accs):
     """Spark rows as the kernel tail emits them, for partials ``accs``,
     plus one doc row that the combine must ignore."""
     tails = [
-        lda._partials_frame([acc], np.full(K, p + 1.0), [-10.0 * (p + 1), 3.0, 7.0])
+        lda._partials_frame(acc, np.full(K, p + 1.0), [-10.0 * (p + 1), 3.0, 7.0])
         for p, acc in enumerate(accs)
     ]
-    doc = pd.DataFrame({"kind": ["doc"], "lang": [-1], "doc_id": [5],
+    doc = pd.DataFrame({"kind": ["doc"], "doc_id": [5],
                         "vec": [np.ones(K)]})
     pdf = pd.concat(tails + [doc], ignore_index=True).assign(
         term_ids=None, term_counts=None, ll=None
