@@ -31,11 +31,18 @@ Scale: corpus-sized data (docs × terms) only ever flows through one
 cached, partition-stable DataFrame; everything model-sized (α, β, φ
 stats) is either broadcast or a narrow aggregation.  100 iterations ⇒
 lineage is cut with localCheckpoint each iteration.
+
+The loop (``_train_stacked``) is written for L ≥ 1 languages over a
+stacked vocabulary: ``train`` is the case L = 1, and polylingual LDA
+(``plans.polylda``) stacks each document's languages and trains here
+too.  The join-mode loop (``plans.lda_join``) shares the α init and
+the per-iteration tail (``_end_iteration``).
 """
 
 from __future__ import annotations
 
 import math
+import time
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -44,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mr_lda_spark.functions.alpha import update_alpha_vector
+from mr_lda_spark.functions.alpha import update_alpha_scalar, update_alpha_vector
 from mr_lda_spark.functions.special import digamma, gammaln
 from mr_lda_spark.operators.lifecycle import (
     ReliableCheckpointSweeper,
@@ -425,20 +432,86 @@ def _estep_kernel(
     return run
 
 
-def _mstep_beta(log_phi: np.ndarray, log_eta: np.ndarray | None) -> np.ndarray:
-    """M-step finalization on the model-sized matrix
+def _mstep_beta(
+    log_phi: np.ndarray, log_eta: np.ndarray | None, truncate_beta: int | None = None
+) -> np.ndarray:
+    """M-step finalization on one language's model-sized matrix
     (TermReducer.java:157-235 semantics): λ_kv = logaddexp(log η_kv,
     logφ_kv), then E[log β] = ψ(e^λ) − ψ(Σ_v e^λ).
 
     ``log_phi`` is the combined (V+1, K) log-φ-sum matrix
-    (``phi_matrix``), −inf for terms no document used.
+    (``phi_matrix``), −inf for terms no document used.  With
+    ``truncate_beta`` = N < V only each topic's top N terms keep their
+    value; the rest drop to the η floor.
     """
-    lam = np.logaddexp(DEFAULT_LOG_ETA if log_eta is None else log_eta, log_phi)
+    lam =np.logaddexp(DEFAULT_LOG_ETA if log_eta is None else log_eta, log_phi)
     lam_exp = np.exp(lam[1:])  # rows 1..V
     norm = lam_exp.sum(axis=0)  # (K,)
     elog = np.full(log_phi.shape, DEFAULT_LOG_ETA)
     elog[1:] = digamma(lam_exp) - digamma(norm)[None, :]
+    if truncate_beta is not None and truncate_beta < len(elog) - 1:
+        # The reference designed (then disabled) approximate top-k
+        # beta to shrink the per-mapper model
+        # (TermReducer.java:34-38, -truncatebeta).  Working version:
+        # keep each topic's top-N terms, floor the tail — at scale
+        # the broadcast then ships N×K entries + one floor scalar
+        # instead of V×K.
+        kth = np.partition(elog[1:], -truncate_beta, axis=0)[-truncate_beta]
+        elog[1:] = np.where(elog[1:] >= kth[None, :], elog[1:], DEFAULT_LOG_ETA)
     return elog
+
+
+def _initial_alpha(alpha_init, num_topics: int) -> np.ndarray:
+    """α⁰ for every EM loop: 1/K (VariationalInference.java:159-160
+    spirit), a scalar broadcast to K, or a copy of a given vector."""
+    if alpha_init is None:
+        return np.full(num_topics, 1.0 / num_topics)
+    if np.isscalar(alpha_init):
+        return np.full(num_topics, float(alpha_init))
+    return np.asarray(alpha_init, dtype=np.float64).copy()
+
+
+def _lang_bounds(num_terms_per_lang) -> np.ndarray:
+    """Stacked-vocabulary row bounds: language l's E[log β] (V_l + 1
+    rows, row 0 unused) is rows bounds[l]:bounds[l+1], so its term t is
+    stacked row bounds[l] + t.  One language: [0, V+1]."""
+    return np.cumsum([0] + [v + 1 for v in num_terms_per_lang])
+
+
+def _end_iteration(
+    state: LdaState, alpha_ss: np.ndarray, totals: np.ndarray,
+    symmetric_alpha: bool, iter_t0: float, converge: float,
+) -> bool:
+    """The per-iteration tail shared by the broadcast and join loops:
+    the Newton–Raphson α update over the documents the E-step processed
+    (``totals`` = the summed 'elbo' partials [ELBO, docs, tokens, term
+    cells, padded cells] — documents the E-step skips, P7, are in
+    neither D nor the α statistic), then the ELBO, per-token perplexity
+    and padding-efficiency history and the iteration's wall time.
+    Returns True once the relative ELBO change is within ``converge``."""
+    num_docs, elbo = int(totals[1]), float(totals[0])
+    if symmetric_alpha:
+        # Keep alpha symmetric: the scalar update on the summed
+        # statistic, reference-style.
+        a = update_alpha_scalar(
+            len(alpha_ss), num_docs, float(state.alpha[0]), float(alpha_ss.sum())
+        )
+        state.alpha = np.full(len(alpha_ss), a)
+    else:
+        state.alpha = update_alpha_vector(num_docs, state.alpha, alpha_ss)
+    state.elbo = elbo
+    state.history.append(elbo)
+    state.iter_seconds.append(round(time.perf_counter() - iter_t0, 3))
+    if totals[4] > 0:
+        state.pad_efficiency.append(float(totals[3] / totals[4]))
+    state.total_tokens = float(totals[2])
+    if state.total_tokens > 0:
+        # Per-token perplexity from the variational bound — the
+        # standard held-out-style metric the reference tracks via
+        # its LOG_LIKELIHOOD counter.
+        state.perplexity_history.append(float(np.exp(-elbo / state.total_tokens)))
+    h = state.history
+    return len(h) > 1 and abs((h[-1] - h[-2]) / h[-2]) <= converge
 
 
 def train(
@@ -476,57 +549,84 @@ def train(
     one-time corpus cut and the per-iteration carried-γ cut, because a
     lost block of either kills a mid-flight training run equally.
     """
+    cols = ["doc_id", "term_ids", "term_counts"]
+    if "gamma" in corpus_doc.columns:
+        cols.append("gamma")
+    return _train_stacked(
+        spark, corpus_doc.select(*cols), [num_terms], num_topics,
+        max_iterations=max_iterations,
+        max_gamma_iter=max_gamma_iter, alpha_init=alpha_init,
+        symmetric_alpha=symmetric_alpha, log_eta=log_eta, seed=seed,
+        converge=converge, random_start_gamma=random_start_gamma,
+        snapshot_dir=snapshot_dir, truncate_beta=truncate_beta,
+        gamma_tol=gamma_tol, estep_backend=estep_backend,
+        corpus_checkpoint=corpus_checkpoint,
+    )
+
+
+def _train_stacked(
+    spark: SparkSession,
+    corpus: DataFrame,
+    num_terms_per_lang: list,
+    num_topics: int,
+    *,
+    max_iterations: int,
+    max_gamma_iter: int,
+    alpha_init,
+    seed: int,
+    converge: float,
+    gamma_tol: float,
+    corpus_checkpoint: bool | str,
+    symmetric_alpha: bool = False,
+    log_eta: np.ndarray | None = None,
+    random_start_gamma: bool = False,
+    snapshot_dir: str | None = None,
+    truncate_beta: int | None = None,
+    estep_backend=None,
+) -> tuple[DataFrame, LdaState]:
+    """The broadcast-β EM loop for L ≥ 1 languages (mono LDA is L = 1;
+    polylingual LDA, ``plans.polylda``, is the same model with one β
+    per language and a shared γ).
+
+    ``corpus`` carries (doc_id, term_ids, term_counts) on the stacked
+    vocabulary (language l's term t is row ``_lang_bounds[l] + t``),
+    optionally gamma, and any other columns, which ride the one corpus
+    checkpoint into the returned relation.  β is initialised per
+    language with ``seed + l`` and stacked; each iteration broadcasts
+    the stacked matrix, and the M-step normalises each language's row
+    slice on its own.  Returns (corpus with final γ, state with the
+    stacked β)."""
     from mr_lda_spark.session import ensure_package_shipped
 
     ensure_package_shipped(spark)
     K = num_topics
-    if alpha_init is None:
-        alpha = np.full(K, 1.0 / K)  # VariationalInference.java:159-160 spirit
-    elif np.isscalar(alpha_init):
-        alpha = np.full(K, float(alpha_init))
-    else:
-        alpha = np.asarray(alpha_init, dtype=np.float64).copy()
-
-    elog_beta = init_elog_beta(num_terms, K, seed)
-    state = LdaState(alpha=alpha, elog_beta=elog_beta)
+    bounds = _lang_bounds(num_terms_per_lang)
+    state = LdaState(
+        alpha=_initial_alpha(alpha_init, K),
+        elog_beta=np.concatenate([
+            init_elog_beta(v, K, seed + lang)
+            for lang, v in enumerate(num_terms_per_lang)
+        ]),
+    )
 
     # The corpus (term arrays) is checkpointed ONCE, partitioned by
     # doc_id, and never re-materialized: each iteration joins the small
     # carried gamma table back onto it.  At 100 TB this is the
     # difference between O(corpus) and O(D×K) per-iteration I/O.
-    n_parts = spark.sparkContext.defaultParallelism
-    has_gamma = "gamma" in corpus_doc.columns
-    cols = ["doc_id", "term_ids", "term_counts"] + (["gamma"] if has_gamma else [])
     # Reliable mode: superseded per-iteration gamma checkpoints are
     # deleted at the next loop top, bounding checkpoint-store disk at
     # the live generation (gamma gen 0 lives inside `base` and is
     # never slot-tracked, so the corpus cut always survives).
     ckpt_gc = ReliableCheckpointSweeper(spark)
     base = cut_corpus_lineage(  # the ONE materialization of the input
-        corpus_doc.select(*cols).repartition(n_parts, "doc_id"),
+        corpus.repartition(spark.sparkContext.defaultParallelism, "doc_id"),
         corpus_checkpoint,
     )
     static_corpus = base.select("doc_id", "term_ids", "term_counts")
-    gamma_df = base.select("doc_id", "gamma") if has_gamma else None
-    num_docs = base.count()
-    state.total_tokens = float(
-        static_corpus.select(
-            F.aggregate(
-                F.transform("term_counts", lambda c: c.cast("double")),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ).alias("n")
-        )
-        .agg(F.sum("n"))
-        .collect()[0][0]
-        or 0.0
-    )
+    gamma_df = base.select("doc_id", "gamma") if "gamma" in base.columns else None
 
-    import time as _time
-
-    prev_elbo = None
     for it in range(max_iterations):
-        iter_t0 = _time.perf_counter()
+        iter_t0 = time.perf_counter()
         ckpt_gc.sweep()  # generation it-2's gamma is unreachable now
         # Broadcast the V×K model once per iteration (torrent, one copy
         # per executor) instead of closure-capturing it into every task.
@@ -548,8 +648,7 @@ def train(
             # Corpus side is already hash-partitioned on doc_id; only
             # the small gamma table shuffles.
             inp = static_corpus.join(gamma_df, "doc_id", "left")
-        out = inp.mapInPandas(kernel, schema=_ESTEP_SCHEMA)
-        out = out.persist()
+        out = inp.mapInPandas(kernel, schema=_ESTEP_SCHEMA).persist()
 
         # One stats pull per iteration: the partitions' dense φ term
         # blocks and α/ELBO partials reduce block-wise on the executors
@@ -557,11 +656,7 @@ def train(
         # moves about P×V×K doubles in a few large rows and the driver
         # receives V×K doubles at any P.
         stats = combine_partials(out)
-        alpha_ss = partial_sum(stats, "alpha", K)
-        totals = partial_sum(stats, "elbo", 5)
-        elbo = float(totals[0])
-
-        next_gamma = ckpt_gc.cut(  # D×K doubles; cuts lineage
+        gamma_df = ckpt_gc.cut(  # D×K doubles; cuts lineage
             out.filter(F.col("kind") == "doc").select(
                 "doc_id", F.col("vec").alias("gamma")
             ),
@@ -572,62 +667,32 @@ def train(
         # Both consumers (stats collect + gamma localCheckpoint) have
         # executed; drop the executor-side model copies.
         eb_bc.unpersist()
-        gamma_df = next_gamma
 
-        # M-step: beta from phi stats; alpha by Newton-Raphson.
-        state.elog_beta = _mstep_beta(
-            phi_matrix(stats, num_terms + 1, K), log_eta
+        # M-step: each language's β from its slice of the φ stats;
+        # alpha by Newton-Raphson.
+        log_phi = phi_matrix(stats, bounds[-1], K)
+        state.elog_beta = np.concatenate([
+            _mstep_beta(
+                log_phi[a:b], None if log_eta is None else log_eta[a:b], truncate_beta
+            )
+            for a, b in zip(bounds, bounds[1:])
+        ])
+        done = _end_iteration(
+            state, partial_sum(stats, "alpha", K), partial_sum(stats, "elbo", 5),
+            symmetric_alpha, iter_t0, converge,
         )
-        if truncate_beta is not None and truncate_beta < num_terms:
-            # The reference designed (then disabled) approximate top-k
-            # beta to shrink the per-mapper model
-            # (TermReducer.java:34-38, -truncatebeta).  Working version:
-            # keep each topic's top-N terms, floor the tail — at scale
-            # the broadcast then ships N×K entries + one floor scalar
-            # instead of V×K.
-            eb = state.elog_beta
-            kth = np.partition(eb[1:], -truncate_beta, axis=0)[-truncate_beta]
-            state.elog_beta = np.where(
-                eb >= kth[None, :], eb, DEFAULT_LOG_ETA
-            )
-            state.elog_beta[0] = eb[0]
-        if symmetric_alpha:
-            # Keep alpha symmetric: update the scalar via the vector
-            # machinery on the summed statistic, reference-style.
-            from mr_lda_spark.functions.alpha import update_alpha_scalar
-
-            a = update_alpha_scalar(K, num_docs, float(state.alpha[0]), float(alpha_ss.sum()))
-            state.alpha = np.full(K, a)
-        else:
-            state.alpha = update_alpha_vector(num_docs, state.alpha, alpha_ss)
-
-        state.elbo = float(elbo)
-        state.history.append(float(elbo))
-        state.iter_seconds.append(round(_time.perf_counter() - iter_t0, 3))
-        if totals[4] > 0:
-            state.pad_efficiency.append(float(totals[3] / totals[4]))
-        if state.total_tokens > 0:
-            # Per-token perplexity from the variational bound — the
-            # standard held-out-style metric the reference tracks via
-            # its LOG_LIKELIHOOD counter.
-            state.perplexity_history.append(
-                float(np.exp(-elbo / state.total_tokens))
-            )
         if snapshot_dir is not None:
             _write_snapshot(spark, snapshot_dir, it + 1, gamma_df, state)
-        if (
-            prev_elbo is not None
-            and abs((elbo - prev_elbo) / prev_elbo) <= converge
-        ):
+        if done:
             break
-        prev_elbo = elbo
 
     ckpt_gc.sweep()  # last superseded generation; the live gamma
     # backs the returned relation
+    rest = base.drop("gamma")
     final = (
-        static_corpus.join(gamma_df, "doc_id", "left")
+        rest.join(gamma_df, "doc_id", "left")
         if gamma_df is not None
-        else static_corpus.withColumn("gamma", F.lit(None).cast("array<double>"))
+        else rest.withColumn("gamma", F.lit(None).cast("array<double>"))
     )
     return final, state
 

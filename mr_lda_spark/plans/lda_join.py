@@ -5,21 +5,27 @@ The reference ships ALL of β to every mapper's heap
 (DocumentMapper.java:475-536) and hits an OOM wall the paper
 acknowledges (the disabled truncation code, TermReducer.java:34-38).
 Spark can do the join MapReduce couldn't: here β is a *DataFrame*
-(term_id, beta ARRAY<DOUBLE>[K]) that never touches the driver:
+(key, beta ARRAY<DOUBLE>[K]) that never touches the driver.  The key is
+the packed int64 ``(lang << 32) | term_id`` (``pack_key``), so one loop
+serves mono LDA (every key in language 0) and polylingual LDA
+(``plans/polylda_join``) alike:
 
 per iteration:
-  1. corpus_tall ⋈ beta on term_id  (shuffle join; corpus side is
-     pre-partitioned by term_id once and reused every iteration)
+  1. corpus_tall ⋈ beta on key  (shuffle join; corpus side is
+     pre-partitioned by key once and reused every iteration)
   2. regroup by doc_id → doc rows carrying their terms' β slices
   3. mapInPandas E-step (same sweeps as plans.lda, β read from rows)
-     → γ/doc-ll rows + PARTITION-COMBINED per-term φ partials
+     → γ/doc-ll rows + PARTITION-COMBINED per-key φ partials
      (size-bounded in-kernel logsumexp fold — tokens×K never hits a
-     shuffle)
-  4. M-step fully relational: logsumexp φ by (term, topic) → η smooth →
-     per-topic normalizer → E[log β'] via an Arrow-batched digamma
-     kernel → next β DataFrame (localCheckpoint, still distributed)
-  5. α stats/ELBO via plain aggregations; only K+1 numbers reach the
-     driver.
+     shuffle) + one α-statistic row and one ELBO-counter row per
+     partition, as in broadcast mode
+  4. M-step fully relational: logsumexp φ by (key, topic) → η smooth →
+     per-(lang, topic) normalizer → E[log β'] via an Arrow-batched
+     digamma kernel → next β DataFrame (localCheckpoint, still
+     distributed)
+  5. one collect of the ≤ 2 partials per partition: the α statistic
+     and [ELBO, docs, tokens, term cells, padded cells] reach the
+     driver, which runs the α update shared with broadcast mode.
 
 Cost model vs broadcast mode: two extra corpus-sized shuffles per
 iteration (the β join and the φ aggregation) — the honest price when
@@ -29,7 +35,7 @@ threshold.
 
 from __future__ import annotations
 
-import math
+import time
 
 import numpy as np
 import pandas as pd
@@ -37,7 +43,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mr_lda_spark.functions.alpha import update_alpha_vector
 from mr_lda_spark.functions.special import digamma
 from mr_lda_spark.operators.lifecycle import (
     ReliableCheckpointSweeper,
@@ -46,8 +51,11 @@ from mr_lda_spark.operators.lifecycle import (
 from mr_lda_spark.plans.lda import (
     DEFAULT_LOG_ETA,
     LdaState,
+    _end_iteration,
     _estep_batch,
+    _initial_alpha,
     _pad,
+    _partials_frame,
     init_elog_beta,
     numpy_sweep_backend,
 )
@@ -55,23 +63,53 @@ from mr_lda_spark.plans.lda import (
 _JOIN_ESTEP_SCHEMA = T.StructType(
     [
         T.StructField("kind", T.StringType()),
-        T.StructField("id", T.LongType()),  # doc_id | term_id
+        T.StructField("id", T.LongType()),  # doc_id | key | -1 (partials)
         T.StructField("vec", T.ArrayType(T.DoubleType())),
         T.StructField("ll", T.DoubleType()),
     ]
 )
 
+_LANG_SHIFT = 32
+_TERM_MASK = (1 << _LANG_SHIFT) - 1
+
+
+def pack_key(lang_col, term_col):
+    """(lang, term_id) → int64 ``(lang << 32) | term_id`` — the Spark
+    column form of the reference's TripleOfInts composite shuffle key
+    (term ids are dense 1-based ints, always < 2^31)."""
+    return F.shiftleft(lang_col.cast("long"), _LANG_SHIFT) + term_col.cast(
+        "long"
+    )
+
+
+def packed_beta_dataframe(spark: SparkSession, elog_betas) -> DataFrame:
+    """Per-language (V_l+1, K) E[log β] matrices → the join path's
+    packed row form (key, beta ARRAY<DOUBLE>[K]).  Model-sized build;
+    plain-float rows so it works with or without Arrow (the driver's
+    vanilla session runs without it)."""
+    rows = [
+        ((lang << _LANG_SHIFT) | v, [float(x) for x in eb[v]])
+        for lang, eb in enumerate(elog_betas)
+        for v in range(1, len(eb))
+    ]
+    return spark.createDataFrame(rows, schema="key long, beta array<double>")
+
 
 def beta_init_dataframe(
-    spark: SparkSession, num_terms: int, num_topics: int, seed: int
+    spark: SparkSession, num_terms_per_lang, num_topics: int, seed: int
 ) -> DataFrame:
-    """Seeded initial E[log β] as a tall DataFrame.  Built driver-side
-    here for determinism/test parity with broadcast mode; a from-data
+    """Seeded initial E[log β] of every language as one packed tall
+    DataFrame.  Built driver-side, language l from ``seed + l``, so the
+    join loop starts from exactly the broadcast loop's β; a from-data
     init (e.g. seeded hash of (term, topic)) drops even this one-time
     driver materialization."""
-    mat = init_elog_beta(num_terms, num_topics, seed)
-    rows = [(int(v), [float(x) for x in mat[v]]) for v in range(1, num_terms + 1)]
-    return spark.createDataFrame(rows, schema="term_id int, beta array<double>")
+    return packed_beta_dataframe(
+        spark,
+        [
+            init_elog_beta(v, num_topics, seed + lang)
+            for lang, v in enumerate(num_terms_per_lang)
+        ],
+    )
 
 
 def _segment_lse(flat_terms: np.ndarray, flat_vecs: np.ndarray):
@@ -99,25 +137,28 @@ def _join_estep_kernel(
     """E-step over doc rows that carry their own β slices
     (terms, counts, betas aligned arrays).  ``learning=False`` is the
     reference's -test mode (VariationalInferenceOptions.java:166-178):
-    γ-only sweeps, no φ statistics, no α rows — only doc rows flow.
+    γ-only sweeps, no φ statistics, no partials — only doc rows flow.
     Each Arrow batch runs through the broadcast path's per-batch E-step
     (``lda._estep_batch``: length-grouped sub-batches, the
     ``numpy_sweep_backend`` sweep) with β gathered from the rows.
 
     φ sufficient statistics are combined PARTITION-LOCALLY (the same
-    in-mapper-combine move as the broadcast path, plans/lda.py:103):
-    instead of one row per (doc, term) — tokens × K doubles into the
-    M-step shuffle, twice, because the two-pass logsumexp re-shuffles
-    its input — the kernel folds each sub-batch's per-term logsumexp into
-    a dict and emits one partial row per distinct term per partition.
-    Memory stays bounded: the dict flushes to output whenever it
-    exceeds ``phi_flush`` terms (so a vocabulary larger than executor
-    memory degrades to more partials, never to OOM), and logsumexp of
-    partials is associative so the relational combine downstream is
-    unchanged."""
+    in-mapper-combine move as the broadcast path): instead of one row
+    per (doc, term) — tokens × K doubles into the M-step shuffle,
+    twice, because the two-pass logsumexp re-shuffles its input — the
+    kernel folds each sub-batch's per-term logsumexp into a dict and
+    emits one partial row per distinct term per partition.  Memory
+    stays bounded: the dict flushes to output whenever it exceeds
+    ``phi_flush`` terms (so a vocabulary larger than executor memory
+    degrades to more partials, never to OOM), and logsumexp of partials
+    is associative so the relational combine downstream is unchanged.
+    The α statistic and the ELBO counters leave as one 'alpha' and one
+    'elbo' row per partition (``lda._partials_frame``)."""
 
     def run(batches):
         phi_acc: dict[int, np.ndarray] = {}
+        alpha_ss = np.zeros(len(alpha))
+        totals = np.zeros(5)
 
         def phi_frame():
             out = pd.DataFrame(
@@ -141,7 +182,7 @@ def _join_estep_kernel(
 
         for pdf in batches:
             betas = [np.asarray(list(b), dtype=np.float64) for b in pdf["betas"]]
-            keep, gamma, doc_ll, alpha_contrib, _ = _estep_batch(
+            keep, gamma, doc_ll, alpha_terms, batch_totals = _estep_batch(
                 [np.asarray(t, dtype=np.int64) for t in pdf["term_ids"]],
                 [np.asarray(c, dtype=np.float64) for c in pdf["term_counts"]],
                 pdf["gamma"] if "gamma" in pdf.columns else None,
@@ -153,31 +194,24 @@ def _join_estep_kernel(
             )
             if not keep.size:
                 continue
-            # Doc rows: γ (+ α contribution folded into 'vec2' via a
-            # second row kind to stay relational).
-            doc_ids = pdf["doc_id"].iloc[keep].astype("int64").values
+            alpha_ss += alpha_terms.sum(axis=0)
+            totals += batch_totals
             yield pd.DataFrame(
                 {
                     "kind": "doc",
-                    "id": doc_ids,
+                    "id": pdf["doc_id"].iloc[keep].astype("int64").values,
                     "vec": list(gamma),
                     "ll": doc_ll,
-                }
-            )
-            if not learning:
-                continue
-            yield pd.DataFrame(
-                {
-                    "kind": "alpha",
-                    "id": doc_ids,
-                    "vec": list(alpha_contrib),
-                    "ll": 0.0,
                 }
             )
             if len(phi_acc) > phi_flush:
                 yield phi_frame()
         if phi_acc:
             yield phi_frame()
+        if learning and totals[1]:
+            yield _partials_frame(None, alpha_ss, totals).rename(
+                columns={"doc_id": "id"}
+            ).assign(ll=0.0)
 
     return run
 
@@ -218,22 +252,90 @@ def train_beta_join(
     normalizer, so the λ relation must cover every term — which is
     exactly what the broadcast M-step's dense matrix does, kept as a
     DataFrame here."""
+    eta_rel = None
+    if eta_seeds is not None:
+        from mr_lda_spark.operators.informed_prior import (
+            LOG_ETA_OTHER,
+            LOG_ETA_SEED,
+        )
+
+        # Dense distributed η: every (key, topic) gets its log-prior
+        # (seed overlay on the log 0.001 floor).  V×K rows, built with
+        # spark.range — never on the driver.
+        eta_rel = cut_corpus_lineage(
+            spark.range(1, num_terms + 1)
+            .select(F.col("id").alias("key"))
+            .crossJoin(
+                spark.range(num_topics).select(F.col("id").cast("int").alias("topic"))
+            )
+            .join(
+                F.broadcast(
+                    eta_seeds.select(
+                        "topic", pack_key(F.lit(0), F.col("term_id")).alias("key")
+                    )
+                    .distinct()
+                    .withColumn("_seed", F.lit(True))
+                ),
+                ["topic", "key"],
+                "left",
+            )
+            .select(
+                "key",
+                "topic",
+                F.when(F.col("_seed"), F.lit(float(LOG_ETA_SEED)))
+                .otherwise(F.lit(float(LOG_ETA_OTHER)))
+                .alias("log_eta"),
+            ),
+            corpus_checkpoint,
+        )
+    return _train_packed(
+        spark,
+        corpus_tall.select(
+            "doc_id", pack_key(F.lit(0), F.col("term_id")).alias("key"), "term_count"
+        ),
+        [num_terms], num_topics, max_iterations=max_iterations,
+        max_gamma_iter=max_gamma_iter, alpha_init=alpha_init, seed=seed,
+        converge=converge, shuffle_partitions=shuffle_partitions,
+        gamma_tol=gamma_tol, corpus_checkpoint=corpus_checkpoint,
+        eta_rel=eta_rel, gamma_init=gamma_init, symmetric_alpha=symmetric_alpha,
+    )
+
+
+def _train_packed(
+    spark: SparkSession,
+    tall: DataFrame,
+    num_terms_per_lang: list,
+    num_topics: int,
+    *,
+    max_iterations: int,
+    max_gamma_iter: int,
+    alpha_init,
+    seed: int,
+    converge: float,
+    shuffle_partitions: int | None,
+    gamma_tol: float,
+    corpus_checkpoint: bool | str,
+    eta_rel: DataFrame | None = None,
+    gamma_init: DataFrame | None = None,
+    symmetric_alpha: bool = False,
+) -> tuple[DataFrame, LdaState]:
+    """The join-mode EM loop for L ≥ 1 languages.  ``tall`` is
+    (doc_id, key, term_count) with ``pack_key`` keys; ``eta_rel`` an
+    optional dense (key, topic, log_eta) prior.  β is a distribution
+    per language per topic, so the normaliser groups by
+    (key >> 32, topic).  Returns (gamma DataFrame, state whose β is
+    the languages' (V_l+1, K) matrices stacked, as the broadcast
+    loop's)."""
     from mr_lda_spark.functions.logmath import logsumexp_agg
     from mr_lda_spark.session import ensure_package_shipped
 
     ensure_package_shipped(spark)
     K = num_topics
-    alpha = (
-        np.full(K, 1.0 / K)
-        if alpha_init is None
-        else np.full(K, float(alpha_init))
-        if np.isscalar(alpha_init)
-        else np.asarray(alpha_init, dtype=np.float64).copy()
-    )
-    state = LdaState(alpha=alpha, elog_beta=np.zeros((0, K)))
+    state = LdaState(alpha=_initial_alpha(alpha_init, K), elog_beta=np.zeros((0, K)))
+    n_parts = shuffle_partitions or spark.sparkContext.defaultParallelism
 
-    # Pre-partition the corpus by term_id ONCE; every iteration's β
-    # join then reuses this partitioning (no corpus re-shuffle).
+    # Pre-partition the corpus by key ONCE; every iteration's β join
+    # then reuses this partitioning (no corpus re-shuffle).
     # corpus_checkpoint selects the lineage-cut tier for the WHOLE
     # training lifecycle (corpus + per-iteration β/γ — a lost block of
     # any of them kills the run): operators/lifecycle.cut_corpus_lineage.
@@ -242,22 +344,10 @@ def train_beta_join(
     # deleted at the next loop top (never at supersede time — the
     # persisted E-step `out` may still re-read them on eviction).
     ckpt_gc = ReliableCheckpointSweeper(spark)
-    tall = cut_corpus_lineage(
-        corpus_tall.repartition(
-            shuffle_partitions or spark.sparkContext.defaultParallelism,
-            "term_id",
-        ),
-        corpus_checkpoint,
-    )
-    num_docs = tall.select("doc_id").distinct().count()
-    state.total_tokens = float(
-        tall.agg(F.sum("term_count")).collect()[0][0] or 0.0
-    )
-
+    tall = cut_corpus_lineage(tall.repartition(n_parts, "key"), corpus_checkpoint)
     beta_df = ckpt_gc.cut(
-        beta_init_dataframe(spark, num_terms, K, seed).repartition(
-            shuffle_partitions or spark.sparkContext.defaultParallelism,
-            "term_id",
+        beta_init_dataframe(spark, num_terms_per_lang, K, seed).repartition(
+            n_parts, "key"
         ),
         corpus_checkpoint,
         slot="beta",
@@ -266,161 +356,82 @@ def train_beta_join(
         None
         if gamma_init is None
         else ckpt_gc.cut(
-            gamma_init.select("doc_id", "gamma"),
-            corpus_checkpoint,
-            slot="gamma",
+            gamma_init.select("doc_id", "gamma"), corpus_checkpoint, slot="gamma"
         )
     )
-
-    eta_rel = None
-    if eta_seeds is not None:
-        from mr_lda_spark.operators.informed_prior import (
-            LOG_ETA_OTHER,
-            LOG_ETA_SEED,
-        )
-
-        # Dense distributed η: every (term, topic) gets its log-prior
-        # (seed overlay on the log 0.001 floor).  V×K rows, built with
-        # spark.range — never on the driver.
-        eta_rel = (
-            spark.range(1, num_terms + 1)
-            .select(F.col("id").cast("int").alias("term_id"))
-            .crossJoin(
-                spark.range(K).select(F.col("id").cast("int").alias("topic"))
-            )
-            .join(
-                F.broadcast(
-                    eta_seeds.select("topic", "term_id").distinct()
-                    .withColumn("_seed", F.lit(True))
-                ),
-                ["topic", "term_id"],
-                "left",
-            )
-            .select(
-                "term_id",
-                "topic",
-                F.when(F.col("_seed"), F.lit(float(LOG_ETA_SEED)))
-                .otherwise(F.lit(float(LOG_ETA_OTHER)))
-                .alias("log_eta"),
-            )
-        )
-        eta_rel = cut_corpus_lineage(eta_rel, corpus_checkpoint)
-
     digamma_udf = F.pandas_udf(
         lambda s: pd.Series(digamma(s.to_numpy())), "double"
     )
 
-    import time as _time
-
-    prev_elbo = None
     for _ in range(max_iterations):
-        # Same per-iteration E+M wall instrumentation as broadcast
-        # mode (plans/lda.py — A7/BASELINE.md sec-per-iteration
-        # counters), so growth probes and benches read the loop
-        # directly instead of dividing the train total.
-        iter_t0 = _time.perf_counter()
+        iter_t0 = time.perf_counter()
         ckpt_gc.sweep()  # generation i-1 is unreachable now
-        joined = tall.join(beta_df, "term_id")
-        docs = joined.groupBy("doc_id").agg(
-            F.collect_list("term_id").alias("term_ids"),
+        # The kernel's column contract is term_ids / term_counts /
+        # betas; packed keys ride through it as opaque int64 "terms" —
+        # the kernel only groups φ partials by them, which is exactly
+        # the composite-key group the reference's TripleOfInts
+        # partitioner implements.
+        docs = tall.join(beta_df, "key").groupBy("doc_id").agg(
+            F.collect_list("key").alias("term_ids"),
             F.collect_list("term_count").alias("term_counts"),
             F.collect_list("beta").alias("betas"),
         )
         if gamma_df is not None:
             docs = docs.join(gamma_df, "doc_id", "left")
-        kernel = _join_estep_kernel(
-            state.alpha, max_gamma_iter, gamma_tol=gamma_tol
-        )
+        kernel = _join_estep_kernel(state.alpha, max_gamma_iter, gamma_tol=gamma_tol)
         out = docs.mapInPandas(kernel, schema=_JOIN_ESTEP_SCHEMA).persist()
 
         # --- M-step: fully relational β' ---
         phi = out.filter(F.col("kind") == "phi").select(
-            F.col("id").cast("int").alias("term_id"),
+            F.col("id").alias("key"),
             F.posexplode("vec").alias("topic", "log_phi"),
         )
-        lam = logsumexp_agg(phi, ["term_id", "topic"], "log_phi", "lse")
+        lam = logsumexp_agg(phi, ["key", "topic"], "log_phi", "lse")
         if eta_rel is None:
-            # η smoothing (uninformed): λ = logaddexp(log η, Σφ).  At
-            # η = 1e-12 the unobserved-term mass is negligible in the
-            # normalizer, so the sparse (observed-terms-only) relation
-            # suffices.
-            lam = lam.select(
-                "term_id",
-                "topic",
-                F.greatest(F.col("lse"), F.lit(DEFAULT_LOG_ETA)).alias("hi"),
-                F.least(F.col("lse"), F.lit(DEFAULT_LOG_ETA)).alias("lo"),
-            ).select(
-                "term_id",
-                "topic",
-                (
-                    F.col("hi") + F.log1p(F.exp(F.col("lo") - F.col("hi")))
-                ).alias("log_lambda"),
-            )
+            # η smoothing (uninformed): at η = 1e-12 the unobserved-term
+            # mass is negligible in the normalizer, so the sparse
+            # (observed-terms-only) relation suffices.
+            lam = lam.withColumn("log_eta", F.lit(DEFAULT_LOG_ETA))
         else:
-            # Informed prior: dense η relation keeps every term in the
-            # normalizer (unobserved terms carry exp(log 0.001) each).
-            lam = (
-                eta_rel.join(lam, ["term_id", "topic"], "left")
-                .select(
-                    "term_id",
-                    "topic",
-                    F.greatest(
-                        F.coalesce("lse", F.lit(float("-inf"))), "log_eta"
-                    ).alias("hi"),
-                    F.least(
-                        F.coalesce("lse", F.lit(float("-inf"))), "log_eta"
-                    ).alias("lo"),
-                )
-                .select(
-                    "term_id",
-                    "topic",
-                    (
-                        F.col("hi")
-                        + F.log1p(F.exp(F.col("lo") - F.col("hi")))
-                    ).alias("log_lambda"),
-                )
+            # Informed prior: the dense η relation keeps every term in
+            # the normalizer (unobserved terms carry exp(log 0.001)).
+            lam = eta_rel.join(lam, ["key", "topic"], "left").withColumn(
+                "lse", F.coalesce("lse", F.lit(float("-inf")))
             )
-        norms = logsumexp_agg(lam, ["topic"], "log_lambda", "log_norm")
+        # λ = logaddexp(log η, Σφ)
+        hi, lo = F.greatest("lse", "log_eta"), F.least("lse", "log_eta")
+        lam = lam.select(
+            "key",
+            "topic",
+            F.shiftrightunsigned("key", _LANG_SHIFT).cast("int").alias("lang"),
+            (hi + F.log1p(F.exp(lo - hi))).alias("log_lambda"),
+        )
+        # β is a distribution PER LANGUAGE per topic — the normalizer
+        # groups by (lang, topic), L×K scalars, always broadcastable.
+        norms = logsumexp_agg(lam, ["lang", "topic"], "log_lambda", "log_norm")
         beta_next = (
-            lam.join(F.broadcast(norms), "topic")
+            lam.join(F.broadcast(norms), ["lang", "topic"])
             .select(
-                "term_id",
+                "key",
                 "topic",
                 (
                     digamma_udf(F.exp("log_lambda"))
                     - digamma_udf(F.exp("log_norm"))
                 ).alias("elog"),
             )
-            .groupBy("term_id")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("topic", "elog"))).alias("p")
-            )
-            .select("term_id", F.col("p.elog").alias("beta"))
+            .groupBy("key")
+            .agg(F.array_sort(F.collect_list(F.struct("topic", "elog"))).alias("p"))
+            .select("key", F.col("p.elog").alias("beta"))
         )
         beta_next = ckpt_gc.cut(
-            beta_next.repartition(
-                shuffle_partitions
-                or spark.sparkContext.defaultParallelism,
-                "term_id",
-            ),
-            corpus_checkpoint,
-            slot="beta",
+            beta_next.repartition(n_parts, "key"), corpus_checkpoint, slot="beta"
         )
 
-        # --- α stats + ELBO: plain aggregations, K+1 numbers pulled ---
-        alpha_rows = (
-            out.filter(F.col("kind") == "alpha")
-            .select(F.posexplode("vec").alias("k", "v"))
-            .groupBy("k")
-            .agg(F.sum("v").alias("s"))
-            .collect()
-        )
-        alpha_ss = np.zeros(K)
-        for r in alpha_rows:
-            alpha_ss[r["k"]] = r["s"]
-        elbo = (
-            out.filter(F.col("kind") == "doc").agg(F.sum("ll")).collect()[0][0]
-        )
+        # --- α statistic + ELBO counters: ≤ 2 rows per partition ---
+        sums = {"alpha": np.zeros(K), "elbo": np.zeros(5)}
+        partials = out.filter(F.col("kind").isin("alpha", "elbo"))
+        for r in partials.select("kind", "vec").collect():
+            sums[r["kind"]] = sums[r["kind"]] + np.asarray(r["vec"])
         gamma_df = ckpt_gc.cut(
             out.filter(F.col("kind") == "doc").select(
                 F.col("id").alias("doc_id"), F.col("vec").alias("gamma")
@@ -430,40 +441,20 @@ def train_beta_join(
         )
         out.unpersist()
         beta_df = beta_next
-
-        if symmetric_alpha:
-            # scalar update on the summed statistic (same rule as the
-            # broadcast path, plans/lda.py:533 — ADVICE r6: the CLI
-            # flag was silently ignored in join mode)
-            from mr_lda_spark.functions.alpha import update_alpha_scalar
-
-            a = update_alpha_scalar(
-                K, num_docs, float(state.alpha[0]), float(alpha_ss.sum())
-            )
-            state.alpha = np.full(K, a)
-        else:
-            state.alpha = update_alpha_vector(num_docs, state.alpha, alpha_ss)
-        state.elbo = float(elbo)
-        state.history.append(float(elbo))
-        if state.total_tokens > 0:
-            state.perplexity_history.append(
-                float(math.exp(-elbo / state.total_tokens))
-            )
-        state.iter_seconds.append(
-            round(_time.perf_counter() - iter_t0, 3)
-        )
-        if prev_elbo is not None and abs((elbo - prev_elbo) / prev_elbo) <= converge:
+        if _end_iteration(
+            state, sums["alpha"], sums["elbo"], symmetric_alpha, iter_t0, converge
+        ):
             break
-        prev_elbo = elbo
 
     ckpt_gc.sweep()  # last superseded generation; the live one backs
     # the returned gamma_df / beta_df
-    # API parity: expose β as a matrix (model-sized pull; the loop
+    # API parity: expose β as matrices (model-sized pull; the loop
     # above never needed it on the driver).
-    mat = np.full((num_terms + 1, K), DEFAULT_LOG_ETA)
+    mats = [np.full((v + 1, K), DEFAULT_LOG_ETA) for v in num_terms_per_lang]
     for r in beta_df.collect():
-        mat[r["term_id"]] = np.asarray(r["beta"])
-    state.elog_beta = mat
+        key = int(r["key"])
+        mats[key >> _LANG_SHIFT][key & _TERM_MASK] = np.asarray(r["beta"])
+    state.elog_beta = np.concatenate(mats)
     return gamma_df, state
 
 

@@ -2,6 +2,14 @@
 §2, §7.1 step 9): one vocabulary and one topic–word matrix β per
 language, a single shared per-document topic posterior γ.
 
+Polylingual LDA with one language is LDA, so this module holds no EM
+loop of its own: ``train_poly`` stacks each document's languages into
+one token list over a stacked vocabulary (language l's term t is row
+offset_l + t, offset_l = Σ_{j<l}(V_j + 1)) and trains through the
+broadcast loop of ``plans.lda``, which initialises and normalises β per
+language.  The shared γ couples the languages because each sweep sums
+c·φ over every token of a document, whatever its language.
+
 Kernel semantics follow polylda/DocumentMapper.java with one deliberate
 divergence: the α sufficient statistic uses ψ(γ_k) − ψ(Σγ) on the
 *actual* γ (the vanilla form) — the reference's polylda mapper applies
@@ -18,24 +26,10 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mr_lda_spark.functions.alpha import update_alpha_vector
-from mr_lda_spark.operators.lifecycle import (
-    ReliableCheckpointSweeper,
-    cut_corpus_lineage,
-)
-from mr_lda_spark.plans.lda import (
-    _ESTEP_SCHEMA,
-    _estep_kernel,
-    _mstep_beta,
-    combine_partials,
-    init_elog_beta,
-    partial_sum,
-    phi_matrix,
-)
+from mr_lda_spark.plans import lda
 
 
 @dataclass
@@ -48,6 +42,15 @@ class PolyLdaState:
     perplexity_history: list = field(default_factory=list)
     total_tokens: float = 0.0
     pad_efficiency: list = field(default_factory=list)  # as LdaState's
+
+
+def poly_state(state: lda.LdaState, num_terms_per_lang) -> PolyLdaState:
+    """A stacked-vocabulary ``LdaState`` (either EM loop's result)
+    with its β split back per language."""
+    fields = dict(vars(state))
+    stacked = fields.pop("elog_beta")
+    bounds = lda._lang_bounds(num_terms_per_lang)
+    return PolyLdaState(elog_betas=np.split(stacked, bounds[1:-1]), **fields)
 
 
 def poly_corpus_from_tall(
@@ -94,50 +97,23 @@ def poly_corpus_from_tall(
     )
 
 
-def _poly_estep_kernel(
-    alpha: np.ndarray,
-    elog_beta,
-    lang_rows: list,
-    max_gamma_iter: int,
-    learning: bool,
-    gamma_tol: float = 0.0,
-):
-    """The mono E-step kernel (``lda._estep_kernel``) over a stacked
-    vocabulary.  ``elog_beta`` is the languages' (V_l+1, K) matrices
-    stacked in language order (``lang_rows`` rows each), or a
-    ``sparkContext.broadcast`` of it (one torrent copy per executor
-    instead of a per-task closure pickle).
-
-    Language l's term t is stacked row offset_l + t, so a document's
-    languages form one token list: the shared γ couples the languages
-    because each sweep sums c·φ over every token of the document,
-    whatever its language; documents are length-grouped by their total
-    length; and the 'phi' blocks cover the stacked (ΣV_l+L, K)
-    log-φ matrix.  Output rows follow ``lda._ESTEP_SCHEMA``."""
-    offsets = np.cumsum([0, *lang_rows[:-1]])
-    mono = _estep_kernel(
-        alpha, elog_beta, max_gamma_iter, learning, False, gamma_tol
+def stack_languages(poly_corpus_doc: DataFrame, num_terms_per_lang) -> DataFrame:
+    """Add the stacked-vocabulary (term_ids, term_counts) columns: each
+    document's language slots concatenated in language order, language
+    l's term t shifted to stacked row ``lda._lang_bounds[l] + t``.  Pure
+    higher-order column functions, no Python."""
+    offsets = F.array(
+        *[F.lit(int(o)) for o in lda._lang_bounds(num_terms_per_lang)[:-1]]
     )
-
-    def stacked(pdf):
-        return pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "term_ids": [
-                    np.concatenate(
-                        [o + np.asarray(t, dtype=np.int64) for o, t in zip(offsets, ids)]
-                    )
-                    for ids in pdf["lang_term_ids"]
-                ],
-                "term_counts": [
-                    np.concatenate([np.asarray(c, dtype=np.float64) for c in cts])
-                    for cts in pdf["lang_term_counts"]
-                ],
-                "gamma": pdf["gamma"] if "gamma" in pdf.columns else None,
-            }
-        )
-
-    return lambda batches: mono(map(stacked, batches))
+    return poly_corpus_doc.withColumn(
+        "term_ids",
+        F.flatten(
+            F.transform(
+                "lang_term_ids",
+                lambda ids, lang: F.transform(ids, lambda t: t + offsets[lang]),
+            )
+        ),
+    ).withColumn("term_counts", F.flatten("lang_term_counts"))
 
 
 def train_poly(
@@ -153,120 +129,29 @@ def train_poly(
     gamma_tol: float = 0.0,
     corpus_checkpoint: bool | str = "local",
 ) -> tuple[DataFrame, PolyLdaState]:
-    """EM loop for polylingual LDA; mirrors plans.lda.train over the
+    """EM for polylingual LDA: ``plans.lda``'s broadcast loop over the
     languages' stacked vocabulary (the TripleOfInts shuffle key of
     polylda/DocumentMapper.java:31-32 becomes a stacked-row φ term
-    block, split back per language for the M-step).  ``corpus_checkpoint`` selects the lineage-cut tier
-    ("local" / "reliable" — ``operators/lifecycle.cut_corpus_lineage``)
+    block, split back per language for the M-step).  The stacking runs
+    once, ahead of the loop's single corpus checkpoint; the returned
+    (doc_id, lang_term_ids, lang_term_counts, gamma) relation reads
+    that checkpoint.  ``corpus_checkpoint`` selects the lineage-cut
+    tier ("local" / "reliable" — ``operators/lifecycle.cut_corpus_lineage``)
     for the corpus and the per-iteration carried γ."""
-    from mr_lda_spark.session import ensure_package_shipped
-
-    ensure_package_shipped(spark)
-    K = num_topics
-    alpha = (
-        np.full(K, 1.0 / K)
-        if alpha_init is None
-        else np.asarray(alpha_init, dtype=np.float64).copy()
-        if not np.isscalar(alpha_init)
-        else np.full(K, float(alpha_init))
+    cols = ["doc_id", "lang_term_ids", "lang_term_counts"]
+    if "gamma" in poly_corpus_doc.columns:
+        cols.append("gamma")
+    final, state = lda._train_stacked(
+        spark,
+        stack_languages(poly_corpus_doc.select(*cols), num_terms_per_lang),
+        num_terms_per_lang, num_topics, max_iterations=max_iterations,
+        max_gamma_iter=max_gamma_iter, alpha_init=alpha_init, seed=seed,
+        converge=converge, gamma_tol=gamma_tol, corpus_checkpoint=corpus_checkpoint,
     )
-    state = PolyLdaState(
-        alpha=alpha,
-        elog_betas=[
-            init_elog_beta(v, K, seed + lang)
-            for lang, v in enumerate(num_terms_per_lang)
-        ],
+    return (
+        final.select("doc_id", "lang_term_ids", "lang_term_counts", "gamma"),
+        poly_state(state, num_terms_per_lang),
     )
-    lang_rows = [len(eb) for eb in state.elog_betas]  # stacked-β rows per language
-
-    # Same carry strategy as plans.lda: static corpus checkpointed
-    # once, only gamma flows between iterations.
-    n_parts = spark.sparkContext.defaultParallelism
-    has_gamma = "gamma" in poly_corpus_doc.columns
-    cols = ["doc_id", "lang_term_ids", "lang_term_counts"] + (
-        ["gamma"] if has_gamma else []
-    )
-    ckpt_gc = ReliableCheckpointSweeper(spark)  # bounds reliable-
-    # mode checkpoint disk at the live gamma generation (plans/lda.py)
-    base = cut_corpus_lineage(
-        poly_corpus_doc.select(*cols).repartition(n_parts, "doc_id"),
-        corpus_checkpoint,
-    )
-    static_corpus = base.select("doc_id", "lang_term_ids", "lang_term_counts")
-    gamma_df = base.select("doc_id", "gamma") if has_gamma else None
-    num_docs = base.count()
-    state.total_tokens = float(
-        base.select(
-            F.aggregate(
-                F.flatten("lang_term_counts"), F.lit(0), lambda a, x: a + x
-            ).cast("double").alias("n")
-        ).agg(F.sum("n")).collect()[0][0]
-        or 0.0
-    )
-
-    import time as _time
-
-    prev_elbo = None
-    for _ in range(max_iterations):
-        iter_t0 = _time.perf_counter()
-        ckpt_gc.sweep()
-        eb_bc = spark.sparkContext.broadcast(np.concatenate(state.elog_betas))
-        kernel = _poly_estep_kernel(
-            state.alpha, eb_bc, lang_rows, max_gamma_iter, learning=True,
-            gamma_tol=gamma_tol,
-        )
-        if gamma_df is None:
-            inp = static_corpus.withColumn(
-                "gamma", F.lit(None).cast("array<double>")
-            )
-        else:
-            inp = static_corpus.join(gamma_df, "doc_id", "left")
-        out = inp.mapInPandas(kernel, schema=_ESTEP_SCHEMA).persist()
-
-        # One combine pass (plans/lda.combine_partials): the stacked
-        # φ blocks, α and ELBO partials reduce on the executors in a
-        # single job.
-        stats = combine_partials(out)
-        alpha_ss = partial_sum(stats, "alpha", K)
-        totals = partial_sum(stats, "elbo", 5)
-        elbo = float(totals[0])
-        next_gamma = ckpt_gc.cut(
-            out.filter(F.col("kind") == "doc").select(
-                "doc_id", F.col("vec").alias("gamma")
-            ),
-            corpus_checkpoint,
-            slot="gamma",
-        )
-        out.unpersist()
-        eb_bc.unpersist()
-        gamma_df = next_gamma
-
-        log_phi = phi_matrix(stats, sum(lang_rows), K)
-        state.elog_betas = [
-            _mstep_beta(lp, None)
-            for lp in np.split(log_phi, np.cumsum(lang_rows)[:-1])
-        ]
-        state.alpha = update_alpha_vector(num_docs, state.alpha, alpha_ss)
-        state.elbo = float(elbo)
-        state.history.append(float(elbo))
-        state.iter_seconds.append(round(_time.perf_counter() - iter_t0, 3))
-        if totals[4] > 0:
-            state.pad_efficiency.append(float(totals[3] / totals[4]))
-        if state.total_tokens > 0:
-            state.perplexity_history.append(
-                float(np.exp(-elbo / state.total_tokens))
-            )
-        if prev_elbo is not None and abs((elbo - prev_elbo) / prev_elbo) <= converge:
-            break
-        prev_elbo = elbo
-
-    ckpt_gc.sweep()
-    final = (
-        static_corpus.join(gamma_df, "doc_id", "left")
-        if gamma_df is not None
-        else static_corpus.withColumn("gamma", F.lit(None).cast("array<double>"))
-    )
-    return final, state
 
 
 def infer_poly(
@@ -274,26 +159,14 @@ def infer_poly(
     poly_corpus_doc: DataFrame,
     state: PolyLdaState,
     max_gamma_iter: int = 50,
-    gamma_tol: float = 0.0,
 ) -> DataFrame:
     """Polylingual test/held-out mode (the reference polylda's own
     ``-test`` flag, polylda/VariationalInference.java:90 — γ-only
-    pass, learning=false): score documents under trained per-language
-    β and α.  Returns (doc_id, gamma, doc_ll)."""
-    from mr_lda_spark.session import ensure_package_shipped
-
-    ensure_package_shipped(spark)
-    eb_bc = spark.sparkContext.broadcast(np.concatenate(state.elog_betas))
-    kernel = _poly_estep_kernel(
-        state.alpha, eb_bc, [len(eb) for eb in state.elog_betas],
-        max_gamma_iter, learning=False, gamma_tol=gamma_tol,
-    )
-    inp = poly_corpus_doc
-    if "gamma" not in inp.columns:
-        inp = inp.withColumn("gamma", F.lit(None).cast("array<double>"))
-    out = inp.select(
-        "doc_id", "lang_term_ids", "lang_term_counts", "gamma"
-    ).mapInPandas(kernel, schema=_ESTEP_SCHEMA)
-    return out.filter(F.col("kind") == "doc").select(
-        "doc_id", F.col("vec").alias("gamma"), F.col("ll").alias("doc_ll")
+    pass, learning=false): ``lda.infer`` over the stacked vocabulary
+    under the trained per-language β and α.  Returns (doc_id, gamma,
+    doc_ll)."""
+    stacked = lda.LdaState(state.alpha, np.concatenate(state.elog_betas))
+    num_terms = [len(eb) - 1 for eb in state.elog_betas]
+    return lda.infer(
+        spark, stack_languages(poly_corpus_doc, num_terms), stacked, max_gamma_iter
     )

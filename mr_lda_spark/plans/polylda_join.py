@@ -9,23 +9,14 @@ The reference's polylda shuffles φ statistics under a composite
 every language's FULL β to every mapper's heap
 (polylda/DocumentMapper.java:475-536).  Here β is one tall DataFrame
 keyed by a packed ``(lang << 32) | term_id`` int64 — the Spark shape of
-the reference's composite key — that never touches the driver:
+the reference's composite key — that never touches the driver.
 
-per iteration:
-  1. poly corpus (packed key) ⋈ β on key  (shuffle join; the corpus
-     side is pre-partitioned by key ONCE and reused every iteration)
-  2. regroup by doc_id → doc rows carrying their tokens' β slices —
-     tokens from ALL languages land in one row, and since every token
-     row already carries its own language's β slice, the E-step kernel
-     is EXACTLY the mono join kernel (``lda_join._join_estep_kernel``):
-     the shared γ couples languages through the per-doc token set, and
-     the language only matters again at the (lang, topic) normalizer
-  3. M-step fully relational: logsumexp φ by (key, topic) → η smooth →
-     per-(lang, topic) normalizer (β is a distribution per language,
-     the one place poly diverges from mono) → E[log β'] → next β
-     DataFrame (localCheckpoint, still distributed)
-  4. α stats / ELBO via plain aggregations; K+1 numbers reach the
-     driver.
+This module holds no EM loop of its own: the join loop of
+``plans.lda_join`` already runs on packed keys (mono LDA is the case
+where every key is in language 0).  Tokens from all languages land in
+one document row, each carrying its own language's β slice, so the
+E-step is exactly the mono join kernel; the language matters again
+only at the M-step's per-(lang, topic) normalizer.
 
 Cost model: identical to mono join mode — two corpus-sized shuffles per
 iteration (β join + φ aggregation) regardless of how many languages, vs
@@ -35,51 +26,12 @@ broadcast mode's Σ_l V_l × K executor-heap copies.  Use broadcast mode
 
 from __future__ import annotations
 
-import math
-import time as _time
-
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mr_lda_spark.functions.alpha import update_alpha_vector
-from mr_lda_spark.functions.special import digamma
-from mr_lda_spark.operators.lifecycle import (
-    ReliableCheckpointSweeper,
-    cut_corpus_lineage,
-)
-from mr_lda_spark.plans.lda import DEFAULT_LOG_ETA, init_elog_beta
-from mr_lda_spark.plans.lda_join import _JOIN_ESTEP_SCHEMA, _join_estep_kernel
-from mr_lda_spark.plans.polylda import PolyLdaState
-
-_LANG_SHIFT = 32
-_TERM_MASK = (1 << _LANG_SHIFT) - 1
-
-
-def pack_key(lang_col, term_col):
-    """(lang, term_id) → int64 ``(lang << 32) | term_id`` — the Spark
-    column form of the reference's TripleOfInts composite shuffle key
-    (term ids are dense 1-based ints, always < 2^31)."""
-    return F.shiftleft(lang_col.cast("long"), _LANG_SHIFT) + term_col.cast(
-        "long"
-    )
-
-
-def poly_beta_init_dataframe(
-    spark: SparkSession, num_terms_per_lang, num_topics: int, seed: int
-) -> DataFrame:
-    """Seeded initial E[log β] for every language as ONE tall DataFrame
-    (key, beta ARRAY<DOUBLE>[K]).  Per-language seeds match broadcast
-    mode (``plans.polylda.train_poly`` uses ``seed + lang``) so the two
-    modes are numerically comparable from iteration 1."""
-    rows = []
-    for lang, num_terms in enumerate(num_terms_per_lang):
-        mat = init_elog_beta(num_terms, num_topics, seed + lang)
-        rows.extend(
-            ((lang << _LANG_SHIFT) | v, [float(x) for x in mat[v]])
-            for v in range(1, num_terms + 1)
-        )
-    return spark.createDataFrame(rows, schema="key long, beta array<double>")
+from mr_lda_spark.plans import lda_join
+from mr_lda_spark.plans.lda_join import pack_key
+from mr_lda_spark.plans.polylda import PolyLdaState, poly_state
 
 
 def train_poly_join(
@@ -93,200 +45,37 @@ def train_poly_join(
     seed: int = 42,
     converge: float = 1e-6,
     shuffle_partitions: int | None = None,
-    collect_beta: bool = True,
     gamma_tol: float = 0.0,
     corpus_checkpoint: bool | str = "local",
 ) -> tuple[DataFrame, PolyLdaState]:
     """EM loop with distributed per-language β.  ``poly_tall`` is the
     encoded polylingual corpus (doc_id, lang, term_id, term_count).
-    Returns (gamma DataFrame, PolyLdaState).  ``state.elog_betas`` is
-    driver-collected per-language matrices ONLY when ``collect_beta``
-    (API parity with broadcast mode); the loop itself never pulls β.
+    Returns (gamma DataFrame, PolyLdaState with the driver-collected
+    per-language β — API parity with broadcast mode; the loop itself
+    never pulls β).
 
-    Documents are the distinct doc_ids of ``poly_tall`` — a tall
-    relation cannot carry zero-token documents, so empty docs (which
-    both modes drop from the E-step, P7) never enter ``num_docs``
-    here."""
-    from mr_lda_spark.functions.logmath import logsumexp_agg
-    from mr_lda_spark.session import ensure_package_shipped
-
-    ensure_package_shipped(spark)
-    K = num_topics
-    L = len(num_terms_per_lang)
-    alpha = (
-        np.full(K, 1.0 / K)
-        if alpha_init is None
-        else np.full(K, float(alpha_init))
-        if np.isscalar(alpha_init)
-        else np.asarray(alpha_init, dtype=np.float64).copy()
+    Documents are the doc_ids of ``poly_tall`` — a tall relation cannot
+    carry zero-token documents, which both modes drop from the E-step
+    (P7)."""
+    packed = poly_tall.select(
+        "doc_id", pack_key(F.col("lang"), F.col("term_id")).alias("key"), "term_count"
     )
-    state = PolyLdaState(alpha=alpha, elog_betas=[])
-
-    n_parts = shuffle_partitions or spark.sparkContext.defaultParallelism
-    # Pre-partition the packed corpus by key ONCE; every iteration's β
-    # join then reuses this partitioning (no corpus re-shuffle).
-    ckpt_gc = ReliableCheckpointSweeper(spark)  # bounds reliable-
-    # mode checkpoint disk at the live β/γ generation (plans/lda_join.py)
-    tall = cut_corpus_lineage(
-        poly_tall.select(
-            "doc_id",
-            pack_key(F.col("lang"), F.col("term_id")).alias("key"),
-            "term_count",
-        ).repartition(n_parts, "key"),
-        corpus_checkpoint,
+    gamma_df, state = lda_join._train_packed(
+        spark, packed, list(num_terms_per_lang), num_topics,
+        max_iterations=max_iterations,
+        max_gamma_iter=max_gamma_iter, alpha_init=alpha_init, seed=seed,
+        converge=converge, shuffle_partitions=shuffle_partitions,
+        gamma_tol=gamma_tol, corpus_checkpoint=corpus_checkpoint,
     )
-    num_docs = tall.select("doc_id").distinct().count()
-    state.total_tokens = float(
-        tall.agg(F.sum("term_count")).collect()[0][0] or 0.0
-    )
-
-    beta_df = ckpt_gc.cut(
-        poly_beta_init_dataframe(spark, num_terms_per_lang, K, seed)
-        .repartition(n_parts, "key"),
-        corpus_checkpoint,
-        slot="beta",
-    )
-    gamma_df = None
-
-    digamma_udf = F.pandas_udf(
-        lambda s: __import__("pandas").Series(digamma(s.to_numpy())), "double"
-    )
-
-    prev_elbo = None
-    for _ in range(max_iterations):
-        iter_t0 = _time.perf_counter()
-        ckpt_gc.sweep()
-        joined = tall.join(beta_df, "key")
-        # The kernel's column contract is the mono one (term_ids /
-        # term_counts / betas); packed keys ride through it as opaque
-        # int64 "terms" — the kernel never decodes them, it only groups
-        # φ partials by them, which is exactly the composite-key group
-        # the reference's TripleOfInts partitioner implements.
-        docs = joined.groupBy("doc_id").agg(
-            F.collect_list("key").alias("term_ids"),
-            F.collect_list("term_count").alias("term_counts"),
-            F.collect_list("beta").alias("betas"),
-        )
-        if gamma_df is not None:
-            docs = docs.join(gamma_df, "doc_id", "left")
-        kernel = _join_estep_kernel(
-            state.alpha, max_gamma_iter, gamma_tol=gamma_tol
-        )
-        out = docs.mapInPandas(kernel, schema=_JOIN_ESTEP_SCHEMA).persist()
-
-        # --- M-step: fully relational per-language β' ---
-        phi = out.filter(F.col("kind") == "phi").select(
-            F.col("id").alias("key"),
-            F.posexplode("vec").alias("topic", "log_phi"),
-        )
-        lam = logsumexp_agg(phi, ["key", "topic"], "log_phi", "lse")
-        lam = lam.select(
-            "key",
-            "topic",
-            # η smoothing (uninformed): λ = logaddexp(log η, Σφ)
-            F.greatest(F.col("lse"), F.lit(DEFAULT_LOG_ETA)).alias("hi"),
-            F.least(F.col("lse"), F.lit(DEFAULT_LOG_ETA)).alias("lo"),
-        ).select(
-            "key",
-            "topic",
-            F.shiftrightunsigned("key", _LANG_SHIFT).cast("int").alias("lang"),
-            (F.col("hi") + F.log1p(F.exp(F.col("lo") - F.col("hi")))).alias(
-                "log_lambda"
-            ),
-        )
-        # β is a distribution PER LANGUAGE per topic — the normalizer
-        # groups by (lang, topic), L×K scalars, always broadcastable.
-        norms = logsumexp_agg(lam, ["lang", "topic"], "log_lambda", "log_norm")
-        beta_next = (
-            lam.join(F.broadcast(norms), ["lang", "topic"])
-            .select(
-                "key",
-                "topic",
-                (
-                    digamma_udf(F.exp("log_lambda"))
-                    - digamma_udf(F.exp("log_norm"))
-                ).alias("elog"),
-            )
-            .groupBy("key")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("topic", "elog"))).alias(
-                    "p"
-                )
-            )
-            .select("key", F.col("p.elog").alias("beta"))
-        )
-        beta_next = ckpt_gc.cut(
-            beta_next.repartition(n_parts, "key"),
-            corpus_checkpoint,
-            slot="beta",
-        )
-
-        # --- α stats + ELBO: plain aggregations, K+1 numbers pulled ---
-        alpha_rows = (
-            out.filter(F.col("kind") == "alpha")
-            .select(F.posexplode("vec").alias("k", "v"))
-            .groupBy("k")
-            .agg(F.sum("v").alias("s"))
-            .collect()
-        )
-        alpha_ss = np.zeros(K)
-        for r in alpha_rows:
-            alpha_ss[r["k"]] = r["s"]
-        elbo = (
-            out.filter(F.col("kind") == "doc").agg(F.sum("ll")).collect()[0][0]
-        )
-        gamma_df = ckpt_gc.cut(
-            out.filter(F.col("kind") == "doc").select(
-                F.col("id").alias("doc_id"), F.col("vec").alias("gamma")
-            ),
-            corpus_checkpoint,
-            slot="gamma",
-        )
-        out.unpersist()
-        beta_df = beta_next
-
-        state.alpha = update_alpha_vector(num_docs, state.alpha, alpha_ss)
-        state.elbo = float(elbo)
-        state.history.append(float(elbo))
-        state.iter_seconds.append(round(_time.perf_counter() - iter_t0, 3))
-        if state.total_tokens > 0:
-            state.perplexity_history.append(
-                float(math.exp(-elbo / state.total_tokens))
-            )
-        if prev_elbo is not None and abs((elbo - prev_elbo) / prev_elbo) <= converge:
-            break
-        prev_elbo = elbo
-
-    ckpt_gc.sweep()  # live generation backs the returned gamma/beta
-    if collect_beta:
-        # API parity with broadcast mode: expose per-language matrices
-        # (model-sized pull; the loop above never needed it).
-        mats = [
-            np.full((v + 1, K), DEFAULT_LOG_ETA) for v in num_terms_per_lang
-        ]
-        for r in beta_df.collect():
-            key = int(r["key"])
-            mats[key >> _LANG_SHIFT][key & _TERM_MASK] = np.asarray(r["beta"])
-        state.elog_betas = mats
-    return gamma_df, state
+    return gamma_df, poly_state(state, num_terms_per_lang)
 
 
 def poly_beta_relation(spark: SparkSession, state) -> DataFrame:
     """Per-language E[log β] matrices (a broadcast-trained
     ``PolyLdaState``) → the join path's packed row form
     (key = (lang << 32) | term_id, beta ARRAY<DOUBLE>[K]) — what
-    ``infer_poly_join`` consumes.  Model-sized build (the inverse of
-    ``train_poly_join``'s final collect).  Plain-float rows so the
-    build works with or without Arrow (the driver's vanilla session
-    runs without it)."""
-    rows = []
-    for lang, eb in enumerate(state.elog_betas):
-        V1, _K = eb.shape
-        rows.extend(
-            ((lang << _LANG_SHIFT) | v, [float(x) for x in eb[v]])
-            for v in range(1, V1)
-        )
-    return spark.createDataFrame(rows, schema="key long, beta array<double>")
+    ``infer_poly_join`` consumes."""
+    return lda_join.packed_beta_dataframe(spark, state.elog_betas)
 
 
 def infer_poly_join(
@@ -302,14 +91,12 @@ def infer_poly_join(
     keys, then the mono join-mode scorer runs unchanged — language
     only ever mattered for β lookup, and each packed row carries its
     own slice.  Returns (doc_id, gamma, doc_ll)."""
-    from mr_lda_spark.plans.lda_join import infer_join
-
     packed = poly_tall.select(
         "doc_id",
         pack_key(F.col("lang"), F.col("term_id")).alias("term_id"),
         "term_count",
     )
-    return infer_join(
+    return lda_join.infer_join(
         spark,
         packed,
         beta_df.withColumnRenamed("key", "term_id"),

@@ -1,15 +1,17 @@
-"""Length-grouped E-step sub-batches: the broadcast, PolyLDA and join
-kernels split each Arrow batch into length-sorted groups, each padded
-to its own width under a byte budget.  Their ``run`` closures are
-driven directly on pandas batches (no Spark) and checked against a
-one-document-at-a-time reference of the coordinate ascent."""
+"""Length-grouped E-step sub-batches: the broadcast and join kernels
+split each Arrow batch into length-sorted groups, each padded to its
+own width under a byte budget.  Their ``run`` closures are driven
+directly on pandas batches (no Spark) and checked against a
+one-document-at-a-time reference of the coordinate ascent.  PolyLDA
+runs the broadcast kernel on its languages stacked into one
+vocabulary (``polylda.stack_languages``)."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from mr_lda_spark.functions.special import digamma, gammaln
-from mr_lda_spark.plans import lda, lda_join, polylda
+from mr_lda_spark.plans import lda, lda_join
 
 K = 4
 ITERS = 40
@@ -178,17 +180,34 @@ def test_broadcast_kernel_matches_per_doc_reference(budget, tol):
     _check_broadcast_like(out, pdf, beta, tol)
 
 
+def _stacked(pdf):
+    """A PolyLDA batch as ``polylda.stack_languages`` hands it to the
+    broadcast kernel: each document's language slots concatenated,
+    language l's term t shifted to stacked row bounds[l] + t."""
+    offsets = lda._lang_bounds(V)[:-1]
+    return pd.DataFrame({
+        "doc_id": pdf["doc_id"],
+        "term_ids": [
+            np.concatenate([o + np.asarray(t) for o, t in zip(offsets, ids)])
+            for ids in pdf["lang_term_ids"]
+        ],
+        "term_counts": [np.concatenate(list(c)) for c in pdf["lang_term_counts"]],
+        "gamma": pdf["gamma"],
+    })
+
+
+def _poly_beta():
+    """Per-language β (language l from seed 1 + l), stacked."""
+    return np.concatenate([_elog_beta(1 + lang, v) for lang, v in enumerate(V)])
+
+
 @pytest.mark.parametrize("tol", [0.0, TOL])
 def test_poly_kernel_matches_per_doc_reference(budget, tol):
     pdf = _poly_batch()
-    betas = [_elog_beta(1 + lang, v) for lang, v in enumerate(V)]
-    rows = [len(b) for b in betas]
-    stacked = np.concatenate(betas)
-    kernel = polylda._poly_estep_kernel(
-        ALPHA, stacked, rows, ITERS, True, gamma_tol=tol
-    )
-    out = _run(kernel, pdf)
-    _check_broadcast_like(out, pdf, stacked, tol, offsets=[0, rows[0]])
+    stacked = _poly_beta()
+    kernel = lda._estep_kernel(ALPHA, stacked, ITERS, True, False, gamma_tol=tol)
+    out = _run(kernel, _stacked(pdf))
+    _check_broadcast_like(out, pdf, stacked, tol, offsets=[0, V[0] + 1])
 
 
 @pytest.mark.parametrize("tol", [0.0, TOL])
@@ -198,14 +217,19 @@ def test_join_kernel_matches_per_doc_reference(budget, tol):
     pdf["betas"] = [list(beta[t]) for t in pdf["term_ids"]]
     out = _run(lda_join._join_estep_kernel(ALPHA, ITERS, gamma_tol=tol), pdf)
 
-    ids, gammas, lls, alpha_ss, acc, _, _ = _reference(pdf, beta, tol)
+    ids, gammas, lls, alpha_ss, acc, tokens, cells = _reference(pdf, beta, tol)
     docs = out[out["kind"] == "doc"]
     assert docs["id"].tolist() == ids.tolist()
     _close(np.stack(docs["vec"].to_numpy()), gammas)
     _close(docs["ll"].to_numpy(), lls)
+    # One 'alpha' and one 'elbo' partial for the partition, as the
+    # broadcast kernel emits them.
     alpha_rows = out[out["kind"] == "alpha"]
-    assert alpha_rows["id"].tolist() == ids.tolist()
+    assert alpha_rows["id"].tolist() == [-1]
     _close(np.stack(alpha_rows["vec"].to_numpy()).sum(axis=0), alpha_ss)
+    elbo_rows = out[out["kind"] == "elbo"]
+    assert elbo_rows["id"].tolist() == [-1]
+    _close(elbo_rows["vec"].iat[0][:4], [lls.sum(), len(ids), tokens, cells])
     phi = out[out["kind"] == "phi"]
     got = np.full_like(acc, -np.inf)
     for t, vec in zip(phi["id"], phi["vec"]):
@@ -245,12 +269,8 @@ def test_gamma_tol_is_per_document(budget, kind):
         beta = _elog_beta(1, V[0])
         kernel = lda._estep_kernel(ALPHA, beta, ITERS, True, False, gamma_tol=TOL)
     else:
-        pdf = _poly_batch(seed=3)
-        betas = [_elog_beta(1 + lang, v) for lang, v in enumerate(V)]
-        kernel = polylda._poly_estep_kernel(
-            ALPHA, np.concatenate(betas), [len(b) for b in betas], ITERS, True,
-            gamma_tol=TOL,
-        )
+        pdf = _stacked(_poly_batch(seed=3))
+        kernel = lda._estep_kernel(ALPHA, _poly_beta(), ITERS, True, False, gamma_tol=TOL)
     base = _gamma_by_doc(kernel, pdf)
     shuffled = _gamma_by_doc(kernel, pdf.sample(frac=1.0, random_state=5))
     subset = _gamma_by_doc(kernel, pdf.iloc[::3])

@@ -87,6 +87,35 @@ def test_alpha_positive(trained):
     assert np.all(np.isfinite(state.alpha))
 
 
+def with_empty_docs(spark, corpus_doc, n=20):
+    """``corpus_doc`` (doc_id, term_ids, term_counts) plus ``n``
+    documents without terms, which the E-step skips (P7)."""
+    corpus_doc = corpus_doc.select("doc_id", "term_ids", "term_counts")
+    first = corpus_doc.agg(F.max("doc_id")).first()[0] + 1
+    empty = spark.createDataFrame(
+        [(first + i, [], []) for i in range(n)], corpus_doc.schema
+    )
+    return corpus_doc.unionByName(empty)
+
+
+def test_empty_documents_leave_model_unchanged(spark, encoded):
+    """Documents the E-step skips count neither in the α statistic nor
+    in the Newton step's D: appending them changes no α, β or ELBO."""
+    corpus_doc, num_terms = encoded
+    small = corpus_doc.orderBy("doc_id").limit(60).localCheckpoint()
+    base, padded = (
+        lda.train(
+            spark, c, num_terms, 3, max_iterations=2, max_gamma_iter=10,
+            seed=5, converge=0.0,
+        )[1]
+        for c in (small, with_empty_docs(spark, small))
+    )
+    np.testing.assert_allclose(padded.alpha, base.alpha, rtol=1e-12)
+    np.testing.assert_allclose(padded.elog_beta, base.elog_beta, rtol=1e-12)
+    np.testing.assert_allclose(padded.history, base.history, rtol=1e-12)
+    assert padded.total_tokens == base.total_tokens
+
+
 @pytest.mark.slow
 def test_seeded_reproducibility(spark, encoded):
     """Two runs with the same seed are bitwise identical (the reference

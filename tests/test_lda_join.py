@@ -2,6 +2,7 @@
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from mr_lda_spark.operators import parse
 from mr_lda_spark.plans import lda, lda_join
@@ -180,3 +181,36 @@ def test_join_mode_resume_matches_broadcast_resume(spark, encoded):
         np.array(s_join.history), np.array(s_bc.history), rtol=1e-8
     )
     np.testing.assert_allclose(s_join.alpha, s_bc.alpha, rtol=1e-6)
+
+
+@pytest.mark.slow
+def test_join_mode_empty_documents(spark, encoded):
+    """Join-mode twin of test_lda's empty-document test: documents
+    without terms vanish from the tall relation, so join mode on a
+    corpus with them equals join mode without them and agrees with
+    broadcast mode on the corpus with them."""
+    tall, num_terms = encoded
+    ids = tall.select("doc_id").distinct().orderBy("doc_id").limit(60)
+    small = tall.join(ids, "doc_id").localCheckpoint()
+    doc = parse.corpus_to_doc_form(small).select("doc_id", "term_ids", "term_counts")
+    first = doc.agg(F.max("doc_id")).first()[0] + 1
+    padded_doc = doc.unionByName(
+        spark.createDataFrame([(first + i, [], []) for i in range(20)], doc.schema)
+    )
+    padded_tall = padded_doc.select(
+        "doc_id", F.explode(F.arrays_zip("term_ids", "term_counts")).alias("p")
+    ).select("doc_id", F.col("p.term_ids").alias("term_id"),
+             F.col("p.term_counts").alias("term_count"))
+    args = dict(max_iterations=2, max_gamma_iter=10, seed=5, converge=0.0)
+    _, base = lda_join.train_beta_join(
+        spark, small, num_terms, 3, shuffle_partitions=8, **args
+    )
+    _, padded = lda_join.train_beta_join(
+        spark, padded_tall, num_terms, 3, shuffle_partitions=8, **args
+    )
+    _, s_bc = lda.train(spark, padded_doc, num_terms, 3, **args)
+    np.testing.assert_allclose(padded.alpha, base.alpha, rtol=1e-12)
+    np.testing.assert_allclose(padded.elog_beta, base.elog_beta, rtol=1e-12)
+    np.testing.assert_allclose(padded.history, base.history, rtol=1e-12)
+    np.testing.assert_allclose(padded.history, s_bc.history, rtol=1e-8)
+    np.testing.assert_allclose(padded.alpha, s_bc.alpha, rtol=1e-6)

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mr_lda_spark.operators import parse
-from mr_lda_spark.plans import polylda
+from mr_lda_spark.plans import lda, polylda
 
 K = 3
 LANGS = ["en", "es"]  # keep 2 languages for speed
@@ -129,3 +129,64 @@ def test_poly_reproducible(spark, poly):
     np.testing.assert_allclose(s1.alpha, s2.alpha, rtol=1e-12)
     for a, b in zip(s1.elog_betas, s2.elog_betas):
         np.testing.assert_allclose(a, b, rtol=1e-9, atol=1e-12)
+
+
+@pytest.fixture(scope="module")
+def mono_small(spark, documents):
+    """A 60-document one-language corpus in doc form, materialized so
+    every run reads the same rows in the same order."""
+    tokens = parse.tokenize(documents)
+    dictionary = parse.build_dictionary(parse.term_stats(tokens), documents.count())
+    tall = parse.encode_corpus(tokens, dictionary)
+    ids = tall.select("doc_id").distinct().orderBy("doc_id").limit(60)
+    small = tall.join(ids, "doc_id")
+    doc = parse.corpus_to_doc_form(small).select("doc_id", "term_ids", "term_counts")
+    return doc.localCheckpoint(), small.localCheckpoint(), dictionary.count()
+
+
+def test_one_language_poly_is_lda(spark, mono_small):
+    """Polylingual LDA with L = 1 is LDA, bit for bit."""
+    doc, _, num_terms = mono_small
+    poly_doc = doc.select(
+        "doc_id",
+        F.array("term_ids").alias("lang_term_ids"),
+        F.array("term_counts").alias("lang_term_counts"),
+    )
+    args = dict(max_iterations=2, max_gamma_iter=10, seed=9, converge=0.0)
+    _, mono = lda.train(spark, doc, num_terms, K, **args)
+    _, poly_st = polylda.train_poly(spark, poly_doc, [num_terms], K, **args)
+    assert poly_st.history == mono.history
+    np.testing.assert_array_equal(poly_st.alpha, mono.alpha)
+    (beta,) = poly_st.elog_betas
+    np.testing.assert_array_equal(beta, mono.elog_beta)
+
+
+def test_stack_languages_expression(spark):
+    """Language l's term t becomes stacked row Σ_{j<l}(V_j + 1) + t: a
+    document missing a language contributes nothing for it, and a
+    language with zero terms still takes one stacked row."""
+    num_terms = [3, 0, 4]  # stacked rows: 0-3 | 4 | 5-9
+    corpus = spark.createDataFrame(
+        [
+            (1, [[1, 3], [], [1, 4]], [[2, 1], [], [5, 1]]),
+            (2, [[], [], [2]], [[], [], [7]]),  # only the last language
+            (3, [[2], [], []], [[4], [], []]),  # only the first
+        ],
+        "doc_id long, lang_term_ids array<array<int>>, "
+        "lang_term_counts array<array<int>>",
+    )
+    rows = {
+        r["doc_id"]: (r["term_ids"], r["term_counts"])
+        for r in polylda.stack_languages(corpus, num_terms).collect()
+    }
+    assert rows == {
+        1: ([1, 3, 6, 9], [2, 1, 5, 1]),
+        2: ([7], [7]),
+        3: ([2], [4]),
+    }
+    _, state = polylda.train_poly(
+        spark, corpus, num_terms, 2, max_iterations=1, max_gamma_iter=5, seed=1
+    )
+    assert [eb.shape for eb in state.elog_betas] == [(4, 2), (1, 2), (5, 2)]
+    for eb in (state.elog_betas[0], state.elog_betas[2]):
+        assert np.all(np.exp(eb[1:]).sum(axis=0) <= 1.0 + 1e-9)

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mr_lda_spark.operators import parse
-from mr_lda_spark.plans import polylda, polylda_join
+from mr_lda_spark.plans import lda_join, polylda, polylda_join
 
 K = 3
 ITERS = 3
@@ -149,3 +149,23 @@ def test_poly_infer_join_matches_broadcast_infer(spark, poly_tall):
             np.array(g), np.array(bc[doc_id][0]), rtol=1e-7
         )
         np.testing.assert_allclose(ll, bc[doc_id][1], rtol=1e-7)
+
+
+@pytest.mark.slow
+def test_one_language_poly_join_is_lda_join(spark, documents):
+    """Join-mode twin of test_polylda's L = 1 test: train_poly_join on
+    a one-language corpus is train_beta_join on the same rows."""
+    tokens = parse.tokenize(documents)
+    dictionary = parse.build_dictionary(parse.term_stats(tokens), documents.count())
+    tall = parse.encode_corpus(tokens, dictionary).localCheckpoint()
+    num_terms = dictionary.count()
+    args = dict(max_iterations=2, max_gamma_iter=10, seed=9, converge=0.0,
+                shuffle_partitions=8)
+    _, mono = lda_join.train_beta_join(spark, tall, num_terms, K, **args)
+    _, poly_st = polylda_join.train_poly_join(
+        spark, tall.withColumn("lang", F.lit(0)), [num_terms], K, **args
+    )
+    np.testing.assert_allclose(poly_st.history, mono.history, rtol=1e-12)
+    np.testing.assert_allclose(poly_st.alpha, mono.alpha, rtol=1e-12)
+    (beta,) = poly_st.elog_betas
+    np.testing.assert_allclose(beta, mono.elog_beta, rtol=1e-12)
